@@ -329,8 +329,8 @@ object PipelineQueries {
     //    maintenance driven end-to-end through 3 CDC batches on BOTH
     //    sides of the star: batch 2 updates a wave of fact rows AND a
     //    wave of dim attributes (the dim delta comes from diffing the
-    //    dim's versioned silver snapshots and broadcasts into a fact
-    //    semi-join); batch 3 retracts a fact wave via the expectation
+    //    dim's versioned silver snapshots; the stream store's dim sink
+    //    re-derives the affected facts); batch 3 retracts a fact wave via the expectation
     //    gate. The oracle is the star join over the CDC-final state —
     //    upserts, tombstones, and dim-diff re-derivation must be
     //    invisible.
@@ -442,7 +442,7 @@ object PipelineQueries {
     //    then publishes the keep-latest mart. The oracle is the SAME
     //    final-state star SQL: keep-latest fact updates, the expectation
     //    retraction wave, and the dim attribute wave must converge to
-    //    the batch-incremental mart exactly, with the whole stream-store
+    //    the incremental mart exactly, with the whole stream-store
     //    machinery invisible.
     "q_stream_medallion" -> ((s, dir) =>
       steadyState(s, "q_stream_medallion", dir, concurrency = 2) { (root, run) =>
@@ -739,8 +739,8 @@ object PipelineQueries {
     // -- [EXT]: STREAMING aggregate-mart maintenance — the orders table
     //    rides a REAL file-stream source through GoldAggOps.goldAggSink
     //    (foreachBatch appending signed per-group partials into the
-    //    GenStore layout the batch IVM uses, batch-id replay guard,
-    //    checkpoint), then the mart reads back via readMart. The oracle
+    //    GenStore layout every incremental mart uses, batch-id replay
+    //    guard, checkpoint), then the mart reads back via readMart. The oracle
     //    is the plain GROUP BY over raw orders — the streaming machinery
     //    must be invisible in the totals.
     "q_stream_gold_agg" -> ((s, dir) => {
@@ -1078,7 +1078,7 @@ object PipelineQueries {
 
     // the SAME final-state star SQL: the config-declared STREAMING mart
     // (changeFeed bridge -> file-stream sinks -> keep-latest publish)
-    // must converge to the batch-incremental mart exactly
+    // must converge to the incremental mart exactly
     "q_stream_medallion" ->
       """SELECT o_orderkey,
         |  CASE WHEN o_orderkey % 13 = 0 THEN o_totalprice + 1000.0

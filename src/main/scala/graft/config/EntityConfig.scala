@@ -172,31 +172,36 @@ final case class GoldConfig(
       * prefix table each publish. Requires the corpus-global segment-
       * cleanup knobs (boilerplate_min_doc_freq / line_dedup_span) to be
       * off, and relies on the same strictly-monotone `_ingested_at`
-      * contract as incremental silver. */
+      * contract as incremental silver. On a `join` or `aggregate` mart,
+      * `"incremental"` is the other spelling of `cadence: "streaming"`:
+      * both name the one stream-store engine ([[streamMart]]). */
     mode: String = "full",
     /** Maintenance cadence of the mart state. `"batch"` (default): the
-      * mart rebuilds or incrementally maintains per triggered run
-      * (`mode` picks which). `"streaming"`: the mart state lives in the
-      * stream-store layout and is maintained by the SAME `foreachBatch`
-      * sinks a live micro-batch stream would drive
+      * mart rebuilds per triggered run, or is maintained incrementally
+      * when `mode` is `"incremental"`. `"streaming"`: the mart state
+      * lives in the stream-store layout and is maintained by the SAME
+      * `foreachBatch` sinks a live micro-batch stream would drive
       * ([[graft.pipeline.GoldAggOps.goldAggSink]] /
       * [[graft.pipeline.GoldJoinOps]]); each triggered run feeds the
-      * published-version delta (`changeFeed` / `signedChangeFeed`)
-      * through a REAL file stream with a persistent checkpoint, so a
-      * deployment can later point an actual stream at the same store
-      * with no migration or backfill. Requires `aggregate` or `join`
-      * (curation gold has no streaming sink) and leaves `mode` at its
-      * default — the streaming store IS the maintenance strategy. */
+      * input deltas (`changeFeed` / `signedChangeFeed` between published
+      * versions of full-mode silver, the merge-time change data feed of
+      * incremental silver) through a REAL file stream with a persistent
+      * checkpoint, so a deployment can later point an actual stream at
+      * the same store. `mode: "incremental"` on a join or aggregate mart
+      * runs this same engine ([[streamMart]]), so set one of the two.
+      * Requires `aggregate` or `join` (curation gold has no streaming
+      * sink). */
     cadence: String = "batch",
     curation: GoldCuration = GoldCuration(),
     /** CROSS-ENTITY gold (the dim⋈fact mart): joins declared against
       * OTHER entities' silver tables, applied in order to this entity's
       * silver. Mutually exclusive with `curation` (a mart is a join +
       * projection, not a text-curation pipeline). With mode
-      * "incremental" the mart is MAINTAINED incrementally (fact-delta
-      * upserts + dim-delta re-derivation against versioned dim
-      * snapshots) — star-only equi joins, full-mode dims. Empty =
-      * curation gold (the default). */
+      * "incremental" (or cadence "streaming") the mart is MAINTAINED
+      * incrementally on the stream store (fact-delta upserts +
+      * dim-delta re-derivation) over full-mode or incremental silver —
+      * star-only equi joins, each flat dim unique on its join keys.
+      * Empty = curation gold (the default). */
     join: Seq[GoldJoin] = Nil,
     /** Projection over the joined frame (SQL expressions, aliases
       * allowed — `"c_name AS customer_name"`). Empty = every column the
@@ -204,11 +209,11 @@ final case class GoldConfig(
     select: Seq[String] = Nil,
     /** AGGREGATE gold (the summary mart): group this entity's silver by
       * `group_by` and publish the declared additive aggregates. With
-      * mode "incremental" the mart is MAINTAINED incrementally
-      * (classical additive IVM: per run only the silver-version row
-      * DIFF is aggregated into signed per-group partials; publish
-      * re-sums the group-count-sized partial store) — requires a
-      * full-mode silver (versioned snapshots to diff). Mutually
+      * mode "incremental" (or cadence "streaming") the mart is
+      * MAINTAINED incrementally on the stream store (classical additive
+      * IVM: per run only the input's signed row delta is aggregated
+      * into per-group partials; publish re-sums the group-count-sized
+      * partial store) over full-mode or incremental silver. Mutually
       * exclusive with `join` and `curation`. */
     aggregate: Option[GoldAggregate] = None,
     /** Physical layout of the gold table (same semantics as the silver
@@ -226,9 +231,9 @@ final case class GoldConfig(
       * the whole curation pipeline.) */
     expectAllOrFail: Map[String, String] = Map.empty,
     /** Batch-file threshold past which the PERSISTED incremental-gold
-      * stores (mart row store, curation prefix, LSH band index,
-      * verified-edge store, aggregate partials) compact back to their
-      * keep-latest (or re-summed) survivors
+      * stores (stream-mart rows/facts/dims, aggregate partials,
+      * curation prefix, LSH band index, verified-edge store) compact
+      * back to their keep-latest (or re-summed) survivors
       * (generation-dir swap, [[graft.pipeline.GenStore]]). These stores
       * are append-only with keep-latest read semantics, so without
       * compaction they grow with TOTAL historical changes and every
@@ -257,10 +262,10 @@ final case class GoldConfig(
       "stages (boilerplate_min_doc_freq / line_dedup_span rewrite text " +
       "from corpus-wide frequencies BEFORE the quality gate); use full " +
       "mode or disable them")
-  // mode "incremental" + join = incrementally-maintained mart
-  // (fact-delta upserts + dim-delta re-derivation); its structural
-  // preconditions (star-only equi joins, full-mode dims) are validated
-  // at run time where schemas exist
+  // mode "incremental" + join = the stream-store mart (fact-delta
+  // upserts + dim-delta re-derivation); its structural preconditions
+  // (star-only equi joins, flat dims unique on their join keys) are
+  // validated at run time where schemas exist
   require(join.nonEmpty || select.isEmpty,
     "gold.select is only meaningful with gold.join (curation gold " +
       "publishes the curated columns)")
@@ -273,13 +278,21 @@ final case class GoldConfig(
     "gold.cadence 'streaming' maintains an aggregate or join mart - " +
       "curation gold has no streaming sink")
   require(cadence == "batch" || mode == "full",
-    "gold.cadence 'streaming' is its own maintenance strategy - leave " +
-      "gold.mode unset (the stream store replaces the batch-IVM stores)")
+    "gold.cadence 'streaming' and gold.mode 'incremental' name the same " +
+      "stream-store engine - set one of them")
   // mode "incremental" + temporal join IS supported: a dim-history
   // change can shift interval boundaries of NEIGHBORING versions, so
   // the maintenance re-derives every fact of a changed KEY (the change
   // rows project to their join-key values; conservative but exact —
   // affected facts are always a subset of the changed keys' facts)
+
+  /** True when the mart state lives in the stream store
+    * ([[graft.pipeline.PipelineRunner.buildGoldStreamMart]]): a
+    * streaming-cadence mart, or a join/aggregate mart in mode
+    * "incremental" — two spellings of one engine. */
+  def streamMart: Boolean = cadence == "streaming" ||
+    (mode == "incremental" && (join.nonEmpty || aggregate.nonEmpty))
+
   def anyExpectations: Boolean =
     expectAllOrDrop.nonEmpty || expectAll.nonEmpty || expectAllOrFail.nonEmpty
 }

@@ -52,15 +52,6 @@ object Audit {
       .withColumn(SourceFile, col("_metadata.file_path"))
       .withColumn(FileModTime, col("_metadata.file_modification_time"))
   }
-
-  /** Variant for inputs with no `_metadata` (e.g. unit-test literals). */
-  def withoutFileMetadata(df: DataFrame,
-      clock: Option[java.sql.Timestamp] = None): DataFrame = {
-    val ts: Column = clock.map(t => lit(t)).getOrElse(current_timestamp())
-    df.withColumn(IngestedAt, ts)
-      .withColumn(SourceFile, lit(null).cast("string"))
-      .withColumn(FileModTime, lit(null).cast("timestamp"))
-  }
 }
 
 /** W1+P3+P4: primary-key dedup keeping the latest row — the reference's one

@@ -58,10 +58,9 @@ private[pipeline] object StoreMarkers {
 }
 
 /** GENERATION-directory parquet store — the shared layout under the
-  * incrementally-maintained gold-state stores (the mart row store, the
-  * curation prefix cache, the LSH band index, the verified-edge store;
-  * the aggregate-partial store pioneered the pattern inline in
-  * [[Pipeline]] and is spec-pinned there).
+  * incrementally-maintained gold-state stores (the stream-mart rows,
+  * facts, dim and aggregate-partial substores, the curation prefix
+  * cache, the LSH band index, the verified-edge store).
   *
   * Layout: data batches live under `<root>/g<N>/part-*.parquet`; a
   * `<root>/_gen` text file names the LIVE generation; root-level
@@ -72,7 +71,7 @@ private[pipeline] object StoreMarkers {
   * generations — a crash at any step leaves the marker naming a
   * complete store (an in-place `mode("overwrite")` would delete the
   * history before the replacement commits, silently truncating it; the
-  * ADVICE-class failure the aggregate store already guards against).
+  * ADVICE-class failure this layout exists to close).
   * An orphan `g<N+1>` left by a crashed attempt is overwritten by the
   * next attempt and swept once a later compaction repoints past it.
   *
@@ -97,9 +96,9 @@ private[pipeline] object StoreMarkers {
   * being read and the first compaction sweep cannot delete it.
   */
 private[pipeline] final class GenStore(fs: FileSystem, root: String,
-    log: String => Unit, marker: Option[Path] = None) {
+    log: String => Unit) {
 
-  private val genMarkerP = marker.getOrElse(new Path(root, "_gen"))
+  private val genMarkerP = new Path(root, "_gen")
 
   /** Absent marker = generation 0 (new or legacy store). An EXISTING
     * but unreadable marker fails loud: falling back to 0 would point

@@ -6,15 +6,16 @@ import org.apache.spark.sql.functions._
 
 import graft.config.GoldAggregate
 
-/** The additive-IVM aggregate algebra shared by the TRIGGERED-BATCH
-  * aggregate mart ([[Pipeline.buildGoldAggIncremental]]) and the
-  * STREAMING sink ([[goldAggSink]]): signed per-group partials
-  * (inserts +1, deletes −1, updates as −old+new) compose under plain
-  * summation because `gold.aggregate` admits only count and
-  * per-row-floored micro sums — associative, commutative, and
-  * retraction-exact. The stream and the batch mart therefore maintain
-  * THE SAME mart state shape, just fed at different cadences
-  * (micro-batch vs per-run snapshot diff).
+/** The additive-IVM aggregate algebra shared by the FULL batch
+  * aggregate mart ([[PipelineRunner.buildGoldAggFrame]], sign ≡ +1) and
+  * the STREAMING sink ([[goldAggSink]]) that maintains every
+  * incremental aggregate mart (`gold.mode: "incremental"` or
+  * `gold.cadence: "streaming"`, driven per triggered run by
+  * [[PipelineRunner.buildGoldStreamMart]], or by a live stream): signed
+  * per-group partials (inserts +1, deletes −1, updates as −old+new)
+  * compose under plain summation because `gold.aggregate` admits only
+  * count and per-row-floored micro sums — associative, commutative,
+  * and retraction-exact.
   *
   * Replay discipline of the sink (at-least-once `foreachBatch`): each
   * partial row is stamped with its micro-batch id; a batch id at or
@@ -206,10 +207,10 @@ object GoldAggOps {
     * that keeps a [[GoldAggregate]] mart fresh at micro-batch latency:
     * each batch's signed rows (CDC feed via `signCol`: +1 insert, −1
     * delete, updates as a −old/+new row pair; append-only feeds omit it
-    * — every row +1) aggregate to per-group partials appended into the
-    * same GenStore layout the batch IVM uses. Read the live mart with
-    * [[readMart]]; totals equal the triggered-batch mart over the same
-    * change feed by associativity (StreamingSpec twin-pins it).
+    * — every row +1) aggregate to per-group partials appended into a
+    * [[GenStore]]. Read the live mart with [[readMart]]; totals equal
+    * the full batch aggregate over the same final state by
+    * associativity (StreamingSpec and PipelineSpec twin-pin it).
     *
     * Doc-header contract: batch-id marker skip + read-side exact-dup
     * drop make the additive totals replay-safe. */

@@ -1665,6 +1665,12 @@ final class PipelineRunner(
     goldGate(entity, g, curated, silver, obs)
   }
 
+  /** The table a mart join reads: the dim entity's silver, or its
+    * published gold for a CHAINED mart (layer "gold"). */
+  private def martDimFqn(j: GoldJoin): String =
+    if (j.layer == "gold") params.goldFqn(j.entity)
+    else params.silverFqn(j.entity)
+
   /** Cross-entity gold mart (`gold.join`): this entity's silver joined
     * to the declared entities' silvers in order, then the declared
     * projection, then the shared gold gate (cluster layout +
@@ -1682,9 +1688,7 @@ final class PipelineRunner(
       // published gold (runLocked's gold phase topologically orders
       // this entity after it); audit-column drops are no-ops when the
       // gold projection already removed them
-      val dim = spark.read.table(
-          if (j.layer == "gold") params.goldFqn(j.entity)
-          else params.silverFqn(j.entity))
+      val dim = spark.read.table(martDimFqn(j))
         .drop(Audit.IngestedAt, Audit.SourceFile, Audit.FileModTime)
       j.temporal match {
         case Some(t) => temporalMartJoin(entity, acc, dim, j, t)
@@ -1728,9 +1732,9 @@ final class PipelineRunner(
     * first's `valid_from`/`valid_to` via `gold.select` first
     * (temporalJoin refuses the collision loudly). */
   /** The single (factKey, dimKey) equi anchor of a temporal join —
-    * shared by the full-mode mart build and the incremental mart's
-    * dim-delta key mapping (the [[starJoinKeys]] role for temporal
-    * entries). */
+    * shared by the full-mode mart build and the stream-store mart's
+    * dim key mapping ([[streamStarFor]]; the [[starJoinKeys]] role for
+    * temporal entries). */
   private def temporalJoinKey(entity: String, j: GoldJoin,
       factColsL: Set[String], dimColsL: Set[String]): (String, String) = {
     def bare(s: String) = s.trim.stripPrefix("`").stripSuffix("`")
@@ -1769,11 +1773,6 @@ final class PipelineRunner(
       j.joinType)
   }
 
-  private def goldMartPath(entity: String): String =
-    if (params.externalLocation.nonEmpty)
-      s"${params.externalLocation}/gold_mart/$entity"
-    else s"$storageRoot/gold_mart/$entity"
-
   /** Parse a star-join condition into (factCol, dimCol) equi pairs —
     * the structural precondition of INCREMENTAL mart maintenance: a dim
     * change can only be mapped back to affected fact rows when each
@@ -1804,363 +1803,6 @@ final class PipelineRunner(
     }
   }
 
-  /** INCREMENTALLY-MAINTAINED join mart (`gold.mode: "incremental"` +
-    * `gold.join`) — materialized-view maintenance for the dim⋈fact
-    * star: per run, only (a) fact rows newer than the store's
-    * watermark and (b) fact rows whose dim rows CHANGED are re-derived
-    * (joined against the CURRENT dims, projected) and upserted into a
-    * persisted row store keyed by the fact PK with a run-sequence
-    * stamp. Dim deltas come from diffing each dim's live versioned
-    * silver snapshot against the version the mart last consumed
-    * ([[readVersion]] — the same retention-bounded time travel the
-    * reference's Delta history provides); the changed dim keys
-    * broadcast into a fact semi-join, so at 100 TB a dim attribute
-    * update touches O(matching fact rows), never a table re-join. A
-    * re-derived fact PK with no surviving join row (inner-join dropout
-    * after a dim retraction) upserts a TOMBSTONE; fact retractions
-    * drop at read time via a semi-join against current silver PKs (the
-    * gold-prefix discipline).
-    *
-    * Publish = keep-latest per PK over the store → live rows →
-    * retraction semi-join → the shared gold gate + versioned publish;
-    * results equal [[buildGoldJoinFrame]]'s full recompute by
-    * construction (PipelineSpec pins twin equivalence across CDC
-    * batches on both sides of the star).
-    *
-    * Preconditions, all fail-loud: star-only equi joins
-    * ([[starJoinKeys]]); dims published by full-mode silver (versioned
-    * whole-table snapshots to diff — a bucketed incremental silver has
-    * none); each dim UNIQUE on its join keys (checked per run — a 1:N
-    * fan-out breaks the fact-PK-keyed upsert store, so it must run in
-    * mode 'full'). A consumed dim version already vacuumed degrades to
-    * re-deriving every fact row, LOUDLY, rather than guessing a
-    * delta. */
-  def buildGoldMartIncremental(entity: String, cfg: EntityConfig,
-      g: GoldConfig, obs: Option[org.apache.spark.sql.Observation] = None)
-      : DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fact = spark.read.table(params.silverFqn(entity))
-    val pkCols = cfg.uniquePrimaryKey
-    // layer-aware dim reads: a CHAINED incremental mart diffs the dim
-    // entity's versioned GOLD snapshots instead of its silver's — gold
-    // publishes through the same versioned layout, and an unchanged
-    // republished dim diffs to an EMPTY delta (content-based diff), so
-    // per-run re-publishes of the dim's gold don't re-derive facts
-    def dimFqn(j: GoldJoin): String =
-      if (j.layer == "gold") params.goldFqn(j.entity)
-      else params.silverFqn(j.entity)
-    val dims: Map[String, DataFrame] = g.join.map(j => j.entity ->
-      spark.read.table(dimFqn(j))
-        .drop(Audit.IngestedAt, Audit.SourceFile, Audit.FileModTime)).toMap
-    g.join.foreach { j =>
-      require(j.layer == "gold" || tableProp(spark,
-          params.silverFqn(j.entity), BucketCountProp).isEmpty,
-        s"gold.$entity: incremental-mart dim '${j.entity}' is published " +
-          "by silver_mode=incremental (bucketed layout — no versioned " +
-          "whole-table snapshots to diff); incremental marts need " +
-          "full-mode dims")
-    }
-    val factColsL = fact.columns.map(_.toLowerCase).toSet
-    // temporal entries anchor on their single equi pair — a dim-history
-    // change maps back to affected facts through the KEY (any interval
-    // shift only affects that key's facts; conservative and exact)
-    val keysByDim: Map[String, Seq[(String, String)]] = g.join.map { j =>
-      val dimColsL = dims(j.entity).columns.map(_.toLowerCase).toSet
-      j.entity -> (j.temporal match {
-        case Some(_) => Seq(temporalJoinKey(entity, j, factColsL, dimColsL))
-        case None    => starJoinKeys(entity, j, factColsL, dimColsL)
-      })
-    }.toMap
-    // the row store is keyed by the FACT PK (keep-latest upsert), which
-    // is only equivalent to the full recompute when each dim matches at
-    // most one row per fact row — a 1:N dim fan-out would silently drop
-    // all but one joined row and pick a nondeterministic survivor. Fail
-    // loud instead: one cheap aggregate per dim per run (dims are the
-    // broadcast-sized side of a star by construction).
-    val dir = goldMartPath(entity)
-    val rowsDir = s"$dir/rows"
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // generation-dir row store (GenStore doc): appends land in
-    // rows/g<N>; the `_rows_wm` / `_dim_versions` markers live at the
-    // mart root and compaction never touches them
-    val rowStore = new GenStore(fs, rowsDir, m => log(s"gold.$entity: $m"))
-    val hasRows = rowStore.exists
-    def readRows(): DataFrame =
-      spark.read.option("mergeSchema", "true").parquet(rowStore.dataDir)
-    // row-store high-water marks from the `_rows_wm` marker ("<epoch
-    // micros>|<seq>", written after each append); fallback to the full
-    // scan for legacy stores (the readWmMarker posture — a stale-low
-    // marker after a crash re-derives a batch whose identical rows
-    // collapse under the keep-latest window)
-    val rowsWmP = new Path(s"$dir/_rows_wm")
-    def readRowsWm(): Option[(Option[java.sql.Timestamp], Long)] =
-      if (!fs.exists(rowsWmP)) None
-      else {
-        val in = fs.open(rowsWmP)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim finally in.close()
-        txt.split('|') match {
-          case Array(us, seq) =>
-            seq.toLongOption.map { sq =>
-              (us.toLongOption.map(u => java.sql.Timestamp.from(
-                java.time.Instant.ofEpochSecond(Math.floorDiv(u, 1000000L),
-                  Math.floorMod(u, 1000000L) * 1000L))), sq)
-            }
-          case _ => None
-        }
-      }
-    val (factWm, nextSeq) = if (!hasRows) (None, 1L)
-      else readRowsWm().map { case (wm, sq) => (wm, sq + 1L) }
-        .getOrElse {
-          val r = readRows()
-            .agg(max(col("_mart_ia")), max(col("_mart_seq"))).head()
-          (if (r.isNullAt(0)) None else Some(r.getTimestamp(0)),
-            (if (r.isNullAt(1)) 0L else r.getLong(1)) + 1L)
-        }
-    // dim versions the mart last consumed (absent on the first run)
-    val markerP = new Path(s"$dir/_dim_versions")
-    val consumed: Map[String, Long] = if (!fs.exists(markerP)) Map.empty
-      else {
-        val in = fs.open(markerP)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        txt.split("\n").filter(_.contains("=")).map { l =>
-          val Array(e, v) = l.trim.split("=");
-          e -> v.toLong
-        }.toMap
-      }
-    val liveVersions: Map[String, Long] = g.join.map { j =>
-      val v = tableVersions(j.entity, j.layer).find(_.live)
-        .map(_.version).getOrElse(throw new IllegalStateException(
-          s"gold.$entity: dim '${j.entity}' has no live ${j.layer} " +
-            "version"))
-      j.entity -> v
-    }.toMap
-    // fan-out guard: a dim that is not unique on its join keys cannot
-    // ride a fact-PK-keyed row store. Validated ONCE per published dim
-    // version (immutable snapshots — see dimUniqueValidated), before
-    // any store mutation below.
-    // temporal dims are EXPECTED non-unique on the join key (a change
-    // stream holds the key's whole history); at-most-one match per fact
-    // comes from scd2's disjoint intervals instead, so the fan-out
-    // guard applies only to flat star dims
-    g.join.filter(_.temporal.isEmpty).foreach { j =>
-      val memoKey = s"$storageRoot|${params.catalogName}|$entity|" +
-        s"${j.entity}|${j.layer}|v${liveVersions(j.entity)}"
-      if (!PipelineRunner.dimUniqueValidated.contains(memoKey)) {
-        val dimKeys = keysByDim(j.entity).map(_._2)
-        val dup = dims(j.entity)
-          .groupBy(dimKeys.map(c => col(s"`$c`")): _*)
-          .agg(count(lit(1)).as("_c")).filter(col("_c") > 1L).limit(1)
-        require(dup.isEmpty,
-          s"gold.$entity: incremental-mart dim '${j.entity}' is NOT " +
-            s"unique on its join keys (${dimKeys.mkString(", ")}) — a " +
-            "1:N fan-out cannot ride a fact-PK-keyed row store (joined " +
-            "rows would be silently dropped); deduplicate the dim's " +
-            "silver on those keys or use gold mode 'full'")
-        PipelineRunner.dimUniqueValidated.add(memoKey)
-      }
-    }
-    val factDelta = factWm match {
-      case Some(w) => fact.filter(col(Audit.IngestedAt) > lit(w))
-      case None => fact
-    }
-    // fact rows invalidated by dim changes: per changed dim, the
-    // symmetric row diff (old snapshot vs live) projected to that dim's
-    // join keys, broadcast into a fact semi-join
-    val affected: Seq[DataFrame] = g.join.flatMap { j =>
-      val cv = consumed.get(j.entity)
-      if (cv.isEmpty || cv.contains(liveVersions(j.entity))) None
-      else {
-        val pairs = keysByDim(j.entity)
-        val dimNow = dims(j.entity)
-        val diffKeys: Option[DataFrame] =
-          try {
-            val dimOld = readVersion(j.entity, cv.get, j.layer)
-              .drop(Audit.IngestedAt, Audit.SourceFile, Audit.FileModTime)
-            // schema evolution: diff over the SHARED columns (an added
-            // column makes every old row trivially "changed" otherwise
-            // only if selected; keep it simple and conservative)
-            val oldL = dimOld.columns.map(_.toLowerCase).toSet
-            val shared = dimNow.columns.filter(c =>
-              oldL.contains(c.toLowerCase))
-            // SIGNATURE-compressed diff (the snapshotDiff/changeFeed
-            // posture) instead of the old two-sided full-row exceptAll:
-            // the exchange carries (row key, one md5) per row, never
-            // every attribute twice. Row key: the dim's join keys for a
-            // flat star dim (unique per version — the fan-out guard
-            // above), PLUS the change id for a temporal history (unique
-            // per change row). A key-value change surfaces as that
-            // row's removed/added pair under the keyed diff, so the
-            // projected key set equals the old symmetric diff's.
-            val rowKey = (pairs.map(_._2) ++
-              j.temporal.map(_.tieBreak).toSeq).distinct
-            val rkL = rowKey.map(_.toLowerCase).toSet
-            if (!rkL.subsetOf(oldL))
-              // the old snapshot predates the row key (schema
-              // evolution on the key itself) — no keyed diff exists;
-              // fall back to the conservative full re-derive
-              throw new NoSuchElementException(
-                s"dim '${j.entity}' version ${cv.get} lacks the diff " +
-                  s"row key ${rowKey.mkString(", ")}")
-            val cmp = shared.filterNot(c => rkL.contains(c.toLowerCase))
-            val o = dimOld.select(shared.map(col): _*)
-            val nw = dimNow.select(shared.map(col): _*)
-            val ch =
-              if (cmp.nonEmpty)
-                graft.analytics.Profiler.snapshotDiff(o, nw, rowKey,
-                  cmp.toSeq)
-              else { // key-only dim: membership is the only signal
-                val oa = o.withColumn("_in_a", lit(1))
-                val nb = nw.withColumn("_in_b", lit(1))
-                oa.join(nb, rowKey, "full_outer")
-                  .filter(col("_in_a").isNull || col("_in_b").isNull)
-              }
-            Some(ch.select(pairs.map { case (_, d) => col(d) }: _*)
-              .distinct())
-          } catch {
-            case _: NoSuchElementException =>
-              log(s"gold.$entity: dim '${j.entity}' version ${cv.get} " +
-                "was vacuumed — re-deriving EVERY fact row this run " +
-                "(correct but not incremental; raise the retention " +
-                "window or run the mart more often)")
-              None
-          }
-        diffKeys match {
-          case Some(keys) =>
-            val renamed = pairs.foldLeft(keys) { case (k, (f, d)) =>
-              k.withColumnRenamed(d, f) }
-            Some(fact.join(broadcast(renamed),
-              pairs.map(_._1), "left_semi"))
-          case None => Some(fact) // vacuumed snapshot: full re-derive
-        }
-      }
-    }
-    val toDerive = affected.foldLeft(factDelta)(
-        (acc, a) => acc.unionByName(a))
-      .dropDuplicates(pkCols)
-      .localCheckpoint(false)
-    // EMPTY-BATCH fast path (the maintainFeed empty-delta posture): a
-    // steady-state run whose fact delta and dim diffs are all empty has
-    // nothing to derive — appending a 0-row batch would still pay the
-    // derive join + a store write job per run. The localCheckpoint above
-    // materializes exactly once either way (this isEmpty IS its first
-    // action), so the probe costs nothing extra on the non-empty path.
-    // The dim-versions marker still advances (the next run's diff window
-    // must start at the versions this run consumed); `_rows_wm` and the
-    // batch seq stay put — no batch was appended, so the store contents,
-    // compaction tiers, and the publish below are all byte-identical to
-    // what appending the 0-row batch would have produced.
-    val emptyRun = hasRows && toDerive.isEmpty
-    if (emptyRun) {
-      val out = fs.create(markerP, true)
-      try out.write(liveVersions.toSeq.sortBy(_._1)
-        .map { case (e, v) => s"$e=$v" }.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      log(s"gold.$entity: no changed facts or dim rows since the last " +
-        s"run - store append skipped, dim marker advanced to " +
-        s"$liveVersions")
-    } else {
-    def joinAll(f: DataFrame): DataFrame = g.join.foldLeft(f) { (acc, j) =>
-      val dim = dims(j.entity)
-      j.temporal match {
-        case Some(t) => temporalMartJoin(entity, acc, dim, j, t)
-        case None =>
-          acc.join(if (j.broadcast) broadcast(dim) else dim,
-            expr(j.on), j.joinType)
-      }
-    }
-    val joined = joinAll(toDerive)
-    val projCols =
-      if (g.select.nonEmpty) g.select.map(expr)
-      else joined.columns.map(c => col(s"`$c`")).toSeq
-    // the store row carries the projected mart columns PLUS hidden
-    // upsert keys: the fact PK (_mpk_*), the fact version (_mart_ia —
-    // the watermark), the run sequence and the live flag
-    val derived = joined.select(projCols ++
-      pkCols.map(c => col(s"`$c`").as(s"_mpk_$c")) :+
-      col(Audit.IngestedAt).as("_mart_ia"): _*)
-      .withColumn("_mart_seq", lit(nextSeq))
-      .withColumn("_mart_live", lit(true))
-    val tomb = toDerive
-      .select(pkCols.map(c => col(s"`$c`").as(s"_mpk_$c")) :+
-        col(Audit.IngestedAt).as("_mart_ia"): _*)
-      .join(derived.select(pkCols.map(c => col(s"_mpk_$c")): _*),
-        pkCols.map(c => s"_mpk_$c"), "left_anti")
-      .withColumn("_mart_seq", lit(nextSeq))
-      .withColumn("_mart_live", lit(false))
-    val rowsObs = org.apache.spark.sql.Observation()
-    derived.unionByName(tomb, allowMissingColumns = true)
-      .observe(rowsObs, max(col("_mart_ia")).as("_wm"))
-      .repartition(col(s"_mpk_${pkCols.head}"))
-      .write.mode("append").parquet(rowStore.dataDir)
-    // marker = (monotone fact watermark, this batch's seq). A batch of
-    // dim-driven re-derivations can carry only OLD fact stamps, so the
-    // watermark is max(previous, observed) — never backwards.
-    val newWm = (factWm ++ observedMax(rowsObs.get))
-      .reduceOption((a, b) => if (a.after(b)) a else b)
-    val wmOut = fs.create(rowsWmP, true)
-    try wmOut.write((newWm.map { t =>
-      val i = t.toInstant
-      (i.getEpochSecond * 1000000L + i.getNano / 1000L).toString
-    }.getOrElse("none") + "|" + nextSeq).getBytes("UTF-8"))
-    finally wmOut.close()
-    val out = fs.create(markerP, true)
-    try out.write(liveVersions.toSeq.sortBy(_._1)
-      .map { case (e, v) => s"$e=$v" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    log(s"gold.$entity: mart upsert batch appended (seq=$nextSeq, " +
-      s"factWm=${factWm.getOrElse("none")}, dims=${liveVersions})")
-    // compaction: keep-latest row per fact PK (live OR tombstone — a
-    // kept tombstone keeps superseding the PK's earlier live versions,
-    // and the global max-seq/max-ia rows survive so the marker-less
-    // fallback scan stays exact). Superseded versions are unreachable
-    // (later batches always carry a strictly larger `_mart_seq`), so
-    // the rewrite is invariant for the publish below; without it the
-    // store grows with TOTAL upserts and every publish re-windows the
-    // full update history.
-    // size-tiered: keep-latest is a max-stamp semilattice, so folding
-    // any SUBSET of batch files keeps each key's subset-max and the
-    // global winner still wins at read (compactTiered's precondition)
-    rowStore.compactTiered(g.compactAfter, "mart row store") { paths =>
-      val cw = org.apache.spark.sql.expressions.Window
-        .partitionBy(pkCols.map(c => col(s"_mpk_$c")): _*)
-        .orderBy(col("_mart_seq").desc)
-      spark.read.option("mergeSchema", "true").parquet(paths: _*)
-        .withColumn("_mart_rn", row_number().over(cw))
-        .filter(col("_mart_rn") === 1).drop("_mart_rn")
-    } { (df, to) =>
-      df.repartition(col(s"_mpk_${pkCols.head}"))
-        .write.mode("overwrite").parquet(to)
-    }
-    } // end non-empty append path
-    // publish: keep-latest per PK, live rows, fact-retraction semi-join
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pkCols.map(c => col(s"_mpk_$c")): _*)
-      .orderBy(col("_mart_seq").desc)
-    val liveRows = readRows()
-      .withColumn("_mart_rn", row_number().over(w))
-      .filter(col("_mart_rn") === 1 && col("_mart_live"))
-      .join(fact.select(pkCols.map(c => col(s"`$c`").as(s"_mpk_$c")): _*),
-        pkCols.map(c => s"_mpk_$c"), "left_semi")
-      .drop("_mart_rn" +: "_mart_seq" +: "_mart_live" +: "_mart_ia" +:
-        pkCols.map(c => s"_mpk_$c"): _*)
-    val boundsSrc =
-      if (g.clusteringCols.forall(fact.columns.contains)) fact
-      else liveRows
-    goldGate(entity, g, liveRows, boundsSrc, obs)
-  }
-
-  /** Per-agg aggregate expressions with a SIGN column — the additive
-    * core shared by the full build (sign ≡ +1) and the incremental
-    * signed-delta partials: count → Σ sign, sum_x1e6 → Σ sign·⌊10⁶·v⌋
-    * over FINITE v (NaN/±Inf contribute nothing, the engine-wide
-    * convention; floors are per-row, so partials compose exactly). */
-  // shared with the streaming aggregate-mart sink (GoldAggOps doc)
-  private def goldAggExprs(a: GoldAggregate, sign: Column): Seq[Column] =
-    GoldAggOps.aggExprs(a, sign)
-
   /** AGGREGATE gold mart (`gold.aggregate`, mode "full"): one hash
     * aggregate over this entity's silver, then the shared gold gate +
     * versioned publish. */
@@ -2168,176 +1810,12 @@ final class PipelineRunner(
       obs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
     val a = g.aggregate.get
     val silver = spark.read.table(params.silverFqn(entity))
-    val es = goldAggExprs(a, lit(1L))
+    val es = GoldAggOps.aggExprs(a, lit(1L))
     val out = silver.groupBy(a.groupBy.map(c => col(s"`$c`")): _*)
       .agg(es.head, es.tail: _*)
     val boundsSrc =
       if (g.clusteringCols.forall(silver.columns.contains)) silver else out
     goldGate(entity, g, out, boundsSrc, obs)
-  }
-
-  /** INCREMENTALLY-MAINTAINED aggregate mart (`gold.mode:
-    * "incremental"` + `gold.aggregate`) — classical additive IVM: per
-    * run the silver-version row DIFF (live snapshot vs the version the
-    * mart last consumed — inserts +1, deletes −1, updates as −old+new)
-    * is aggregated into SIGNED per-group partials and appended to a
-    * group-count-sized store; publish re-sums the store and keeps
-    * groups whose net row count is positive. Work per run is
-    * O(changed rows), never a fact-table rescan — the aggregate twin of
-    * [[buildGoldMartIncremental]]'s join maintenance, sound because
-    * count and per-row-floored micro sums are associative under signed
-    * deltas (which is why `gold.aggregate` admits only those ops).
-    *
-    * The partial store compacts back to one row per group past 16
-    * batches (associativity makes compaction invariant — spec-pinned),
-    * via generation directories: the compacted partial commits to a
-    * fresh dir and a marker repoints before the old generation drops,
-    * so a crash mid-compaction can never truncate the history.
-    * Preconditions fail loud: full-mode silver (versioned snapshots to
-    * diff). A vacuumed consumed snapshot degrades LOUDLY to a store
-    * rebuild from the live snapshot rather than guessing a delta. */
-  def buildGoldAggIncremental(entity: String, cfg: EntityConfig,
-      g: GoldConfig, obs: Option[org.apache.spark.sql.Observation] = None)
-      : DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val a = g.aggregate.get
-    require(tableProp(spark, params.silverFqn(entity),
-        BucketCountProp).isEmpty,
-      s"gold.$entity: incremental aggregate marts need a full-mode " +
-        "silver (versioned whole-table snapshots to diff); " +
-        "silver_mode=incremental publishes bucketed layouts")
-    val live = spark.read.table(params.silverFqn(entity))
-    val dir = goldMartPath(entity)
-    val partialsDir = s"$dir/agg_partials"
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val markerP = new Path(s"$dir/_agg_fact_version")
-    // generation-dir partial store (GenStore doc — this store pioneered
-    // the pattern, so its marker keeps its historical name/location):
-    // compaction rewrites to a fresh generation and repoints before the
-    // old drops, and a pre-generation flat layout migrates into g0 on
-    // first touch (an unmigrated history would silently truncate the
-    // published totals)
-    val store = new GenStore(fs, partialsDir,
-      m => log(s"gold.$entity: $m"),
-      marker = Some(new Path(s"$dir/_agg_gen")))
-    val consumed: Option[Long] = if (!fs.exists(markerP)) None else {
-      val in = fs.open(markerP)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      txt.trim.toLongOption
-    }
-    val liveVersion = tableVersions(entity, "silver").find(_.live)
-      .map(_.version).getOrElse(throw new IllegalStateException(
-        s"gold.$entity: no live silver version"))
-    // (plus, minus, skipAppend): the signed row delta, and whether it is
-    // KNOWN empty — an empty delta appends nothing (see below)
-    val (plus, minus, skipAppend) = consumed match {
-      case Some(cv) if cv == liveVersion =>
-        (live.limit(0), live.limit(0), true)
-      case Some(cv) =>
-        try {
-          val old = readVersion(entity, cv)
-          val oldL = old.columns.map(_.toLowerCase).toSet
-          val shared = live.columns.filter(c =>
-            oldL.contains(c.toLowerCase))
-          val l = live.select(shared.map(col): _*)
-          val o = old.select(shared.map(col): _*)
-          // SIGNATURE-compressed keyed diff (the tableChanges/
-          // signedChangeFeed posture) instead of the old two-sided
-          // full-row exceptAll: the diff's exchange carries (PK, one
-          // md5) per row — never every fact attribute twice — and the
-          // delta rows come back through two PK semi-joins. Silver is
-          // PK-unique by construction, so plus = TO rows of
-          // added∪changed keys and minus = FROM rows of removed∪changed
-          // keys is exactly the exceptAll multiset pair, up to rows
-          // differing ONLY in audit lineage — those produced a +row/−row
-          // pair whose exact integer partials cancel at publish, so the
-          // published totals are identical (and the streaming-cadence
-          // twin already diffs audit-blind via changeFeed).
-          val pk = cfg.uniquePrimaryKey
-          val pkL = pk.map(_.toLowerCase).toSet
-          val audit = Set(Audit.IngestedAt, Audit.SourceFile,
-            Audit.FileModTime)
-          val cmp = shared.filter(c =>
-            !pkL.contains(c.toLowerCase) && !audit.contains(c))
-          if (!pkL.subsetOf(oldL) || cmp.isEmpty)
-            // degenerate shapes (PK renamed across versions, or a
-            // PK+audit-only table): keep the exact full-row diff
-            (l.exceptAll(o), o.exceptAll(l), false)
-          else {
-            val ch = graft.analytics.Profiler
-              .snapshotDiff(o, l, pk, cmp.toSeq)
-              .localCheckpoint(false) // feeds the probe + both semi-joins
-            def side(df: DataFrame, statuses: Seq[String]) =
-              df.join(ch.filter(col("status").isin(statuses: _*))
-                .select(pk.map(col): _*), pk, "left_semi")
-            val empty = ch.isEmpty
-            (side(l, Seq("added", "changed")),
-              side(o, Seq("removed", "changed")), empty)
-          }
-        } catch {
-          case _: NoSuchElementException =>
-            log(s"gold.$entity: consumed silver version $cv was " +
-              "vacuumed — rebuilding the aggregate store from the live " +
-              "snapshot (correct but not incremental; raise the " +
-              "retention window or run the mart more often)")
-            if (fs.exists(new Path(partialsDir)))
-              fs.delete(new Path(partialsDir), true)
-            (live, live.limit(0), false)
-        }
-      case None => (live, live.limit(0), false)
-    }
-    val gcols = a.groupBy.map(c => col(s"`$c`"))
-    val delta = plus.withColumn("_sign", lit(1L))
-      .unionByName(minus.withColumn("_sign", lit(-1L)))
-    // hidden net row count: the liveness filter at publish (a group
-    // whose inserts were all retracted must vanish from the mart)
-    val es = goldAggExprs(a, col("_sign")) :+
-      coalesce(sum(col("_sign")), lit(0L)).as("_agg_n")
-    // group-hash-REBALANCED append (GoldAggOps.writeSizeScaled): group
-    // columns are user-declared, so the partial row set is tiny at
-    // dashboard grain (AQE coalesces to one file — the file-count
-    // compaction trigger still counts batches) but DATA-sized for
-    // `group by user_id` over a 100 TB fact — a coalesce(1) here was
-    // the r11 verdict's one open single-task scale funnel
-    def storeSums(from: String*) = {
-      val sums = (a.aggs.map(_.as) :+ "_agg_n")
-        .map(c2 => sum(col(s"`$c2`")).as(c2))
-      spark.read.parquet(from: _*)
-        .groupBy(gcols: _*).agg(sums.head, sums.tail: _*)
-    }
-    // EMPTY-DELTA fast path (the maintainFeed posture): a known-empty
-    // delta appends nothing — a 0-row partial batch would only cost a
-    // write job per steady-state run. The consumed marker still
-    // advances (next run diffs from the version this run consumed); the
-    // store contents and the publish are byte-identical either way.
-    if (!skipAppend) {
-      GoldAggOps.writeSizeScaled(
-        delta.groupBy(gcols: _*).agg(es.head, es.tail: _*),
-        a.groupBy, "append", store.dataDir)
-      // size-tiered compaction: re-sum folded batches to one partial per
-      // group — signed sums are commutative, so ANY subset folds
-      // invariantly (compactTiered's precondition)
-      store.compactTiered(g.compactAfter, "aggregate store") { paths =>
-        storeSums(paths: _*)
-      } { (df, to) =>
-        GoldAggOps.writeSizeScaled(df, a.groupBy, "overwrite", to) }
-    }
-    val out = fs.create(markerP, true)
-    try out.write(liveVersion.toString.getBytes("UTF-8"))
-    finally out.close()
-    log(s"gold.$entity: " + (if (skipAppend) "empty delta - partial " +
-      s"append skipped (consumed=${consumed.getOrElse("none")} -> " +
-      s"$liveVersion)"
-    else "aggregate partial appended " +
-      s"(consumed=${consumed.getOrElse("none")} -> $liveVersion)"))
-    val published = storeSums(store.dataDir)
-      .filter(col("_agg_n") > 0L).drop("_agg_n")
-    val boundsSrc =
-      if (g.clusteringCols.forall(live.columns.contains)) live
-      else published
-    goldGate(entity, g, published, boundsSrc, obs)
   }
 
   /** [[graft.llm.Curation.Config]] from the config-declared knobs. */
@@ -2372,7 +1850,8 @@ final class PipelineRunner(
 
   /** Entities whose merges must emit CDF batches, derived from the FULL
     * run config in [[runLocked]]: every incremental-silver entity that a
-    * streaming-cadence gold mart consumes (as the mart entity itself or
+    * stream-store gold mart (`GoldConfig.streamMart`) consumes (as the
+    * mart entity itself or
     * as a silver-layer dim). A bucketed layout has no versioned
     * snapshots to diff — old generations vacuum away — so the change
     * feed must be captured AT MERGE TIME, while both the pre-image and
@@ -2627,14 +2106,14 @@ final class PipelineRunner(
     * consuming marts' `_consumed` markers. A consumer whose marker is
     * missing (mart never ran yet) blocks the vacuum — its first feed is
     * an initial load, but the marker is the only proof. Entities with
-    * `silver_cdf: true` and NO declared streaming consumer are
+    * `silver_cdf: true` and NO declared stream-store consumer are
     * external-consumer feeds: never auto-vacuumed (the external reader
     * owns retention). */
   private def vacuumCdf(entities: Map[String, EntityConfig]): Unit = {
     import org.apache.hadoop.fs.Path
     val consumers: Map[String, Seq[String]] = entities.toSeq
       .flatMap { case (ge, cfg) =>
-        cfg.gold.toSeq.filter(_.cadence == "streaming").flatMap { g =>
+        cfg.gold.toSeq.filter(_.streamMart).flatMap { g =>
           (ge +: g.join.filter(_.layer == "silver").map(_.entity))
             .map(_ -> ge)
         }
@@ -2682,7 +2161,7 @@ final class PipelineRunner(
     }
   }
 
-  // ---- streaming-cadence gold (gold.cadence: "streaming") -----------------
+  // ---- stream-store gold (gold.cadence "streaming" / mode "incremental") --
 
   private def goldStreamPath(entity: String): String =
     if (params.externalLocation.nonEmpty)
@@ -2690,6 +2169,35 @@ final class PipelineRunner(
     else s"$storageRoot/gold_stream/$entity"
 
   private val FeedDirRe = "v(-?\\d+)_(\\d+)".r
+
+  /** A feed's `_consumed` marker. Fail-loud parse (the GenStore.readGen
+    * discipline): consumed pairs are VACUUMED, so a corrupt marker
+    * silently mapped to None would leave no pairs either and re-mint a
+    * v-1 initial-load pair — for an aggregate mart that appends the
+    * whole live version as fresh +1 partials on top of the existing
+    * totals (silent doubling). */
+  private def feedMarker(fs: org.apache.hadoop.fs.FileSystem,
+      feedDir: String): Option[Long] = {
+    val p = new org.apache.hadoop.fs.Path(feedDir, "_consumed")
+    StoreMarkers.readText(fs, p).map(txt =>
+      txt.toLongOption.getOrElse(throw new IllegalStateException(
+        s"streaming-cadence feed marker $p is unreadable " +
+          s"('$txt') - refusing to guess the consumed version (a " +
+          "reset would re-mint an initial-load pair over a live " +
+          "sink); restore the marker or rebuild the stream state")))
+  }
+
+  /** A feed's committed version pairs `v<from>_<to>`, keyed by `to`. */
+  private def feedPairs(fs: org.apache.hadoop.fs.FileSystem,
+      feedDir: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
+    val d = new org.apache.hadoop.fs.Path(feedDir)
+    if (!fs.exists(d)) Seq.empty
+    else fs.listStatus(d).filter(_.isDirectory)
+      .flatMap(st => st.getPath.getName match {
+        case FeedDirRe(_, to) => to.toLongOption.map(_ -> st.getPath)
+        case _                => None
+      }).toSeq
+  }
 
   /** Run one AvailableNow pass of a stream-mart sink to completion. */
   private def runAvailableNow(
@@ -2730,18 +2238,7 @@ final class PipelineRunner(
     val fs = new Path(feedDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val consumedP = new Path(feedDir, "_consumed")
-    // fail-loud parse (the GenStore.readGen discipline): consumed pairs
-    // are VACUUMED, so a corrupt marker silently mapped to None would
-    // leave dirsMax=None too and re-mint a v-1 initial-load pair — for
-    // an aggregate mart that appends the whole live version as fresh +1
-    // partials on top of the existing totals (silent doubling)
-    def marker: Option[Long] =
-      StoreMarkers.readText(fs, consumedP).map(txt =>
-        txt.toLongOption.getOrElse(throw new IllegalStateException(
-          s"streaming-cadence feed marker $consumedP is unreadable " +
-            s"('$txt') - refusing to guess the consumed version (a " +
-            "reset would re-mint an initial-load pair over a live " +
-            "sink); restore the marker or rebuild the stream state")))
+    def marker: Option[Long] = feedMarker(fs, feedDir)
     // the sink checkpoint's commits log: non-empty means at least one
     // pair was drained through the sink — the initial-load guard below
     def sinkHasConsumed: Boolean = {
@@ -2749,13 +2246,7 @@ final class PipelineRunner(
       fs.exists(commits) && fs.listStatus(commits)
         .exists(_.getPath.getName.toLongOption.nonEmpty)
     }
-    def pairDirs: Seq[(Long, Path)] =
-      if (!fs.exists(new Path(feedDir))) Seq.empty
-      else fs.listStatus(new Path(feedDir)).filter(_.isDirectory)
-        .flatMap(st => st.getPath.getName match {
-          case FeedDirRe(_, to) => to.toLongOption.map(_ -> st.getPath)
-          case _                => None
-        }).toSeq
+    def pairDirs: Seq[(Long, Path)] = feedPairs(fs, feedDir)
     def dirsMax: Option[Long] = pairDirs.map(_._1).maxOption
     def drain(): Unit = pairDirs.maxByOption(_._1).foreach {
       case (hi, newest) =>
@@ -2876,42 +2367,6 @@ final class PipelineRunner(
     }
   }
 
-  /** STREAMING-cadence mart (`gold.cadence: "streaming"`): the mart
-    * state lives in the stream-store layout and is maintained by the
-    * SAME `foreachBatch` sinks a live micro-batch stream would drive —
-    * [[GoldAggOps.goldAggSink]] for `gold.aggregate` (signed deltas,
-    * additive IVM) and [[GoldJoinOps.dimSink]]/[[GoldJoinOps.factSink]]
-    * for `gold.join` (full-row CDC images, keyed upsert stores). Each
-    * triggered run bridges the medallion into those sinks: the
-    * per-input delta ([[signedChangeFeed]]/[[changeFeed]] between
-    * published versions for FULL-mode silver, the merge-time CDF
-    * images ([[cdfDeltaFrame]]) for INCREMENTAL/bucketed silver — so
-    * the 100 TB silver write path and the streaming marts compose; the
-    * whole live state as inserts on first
-    * consumption) rides a REAL file stream with a persistent
-    * checkpoint through the sink, then the publish reads the live mart
-    * back ([[GoldAggOps.readMart]] / [[GoldJoinOps.readMart]]) through
-    * the shared gold gate. Because the store, checkpoints, and replay
-    * markers are exactly the streaming deployment's, an actual stream
-    * can later take over the same store through ONE explicit marker
-    * migration ([[takeoverStreamMart]] — the replay gates otherwise
-    * fail loud on a fresh checkpoint's restarted batch ids, by
-    * design); the config knob only changes WHO drives the sinks
-    * (spec-pinned equivalence: the mart equals the batch
-    * star/aggregate over the final silver state, and a live
-    * `foreachBatch` stream continues a config-built store to the same
-    * oracle — StreamingSpec).
-    *
-    * Scale shape per run: O(changed rows) delta extraction (the
-    * signature-compressed snapshot diff), one micro-batch per input
-    * through the sinks (fact batches broadcast-join batch-restricted
-    * dim slices; dim batches re-derive O(affected facts) via the
-    * two-phase restrict), and a keep-latest/re-sum read over stores
-    * bounded by compaction. Dims feed BEFORE facts so first-run facts
-    * derive against complete dim state. Preconditions fail loud:
-    * silver-layer star/temporal dims; incremental inputs additionally
-    * carry a CDF epoch so an upstream full refresh rebuilds the mart
-    * loud instead of replaying a restarted clock. */
   /** The [[GoldJoinOps.StreamStar]] spec a config-declared streaming
     * JOIN mart runs under — shared by [[buildGoldStreamMart]] and
     * [[takeoverStreamMart]] so the triggered bridge and a live takeover
@@ -2925,9 +2380,7 @@ final class PipelineRunner(
       // layer "gold" = a CHAINED streaming mart: the dim is another
       // entity's PUBLISHED gold (the Kahn waves in runLocked order its
       // publish before this mart), fed by the same versioned changeFeed
-      val dimFqn = if (j.layer == "gold") params.goldFqn(j.entity)
-        else params.silverFqn(j.entity)
-      val dimColsL = spark.read.table(dimFqn)
+      val dimColsL = spark.read.table(martDimFqn(j))
         .columns.map(_.toLowerCase).toSet
       val keys = j.temporal match {
         case Some(_) =>
@@ -2972,9 +2425,11 @@ final class PipelineRunner(
   def takeoverStreamMart(entity: String, cfg: EntityConfig): Unit = {
     val g = cfg.gold.getOrElse(throw new IllegalArgumentException(
       s"takeoverStreamMart($entity): entity declares no gold section"))
-    require(g.cadence == "streaming",
-      s"takeoverStreamMart($entity): gold cadence is '${g.cadence}' - " +
-        "only streaming-cadence marts keep a stream store to migrate")
+    require(g.streamMart,
+      s"takeoverStreamMart($entity): gold cadence is '${g.cadence}' and " +
+        s"mode '${g.mode}' - only stream-store marts (cadence " +
+        "'streaming', or an incremental join/aggregate mart) keep a " +
+        "stream store to migrate")
     val storeDir = s"${goldStreamPath(entity)}/store"
     g.aggregate match {
       case Some(a) =>
@@ -2989,13 +2444,101 @@ final class PipelineRunner(
       "drained and stopped)")
   }
 
+  /** STREAM-STORE mart (`gold.cadence: "streaming"`, or a join or
+    * aggregate mart in `gold.mode: "incremental"` — one engine, two
+    * spellings, [[GoldConfig.streamMart]]): the mart state lives in the
+    * stream-store layout and is maintained by the SAME `foreachBatch`
+    * sinks a live micro-batch stream would drive —
+    * [[GoldAggOps.goldAggSink]] for `gold.aggregate` (signed deltas,
+    * additive IVM) and [[GoldJoinOps.dimSink]]/[[GoldJoinOps.factSink]]
+    * for `gold.join` (full-row CDC images, keyed upsert stores). Each
+    * triggered run bridges the medallion into those sinks: the
+    * per-input delta ([[signedChangeFeed]]/[[changeFeed]] between
+    * published versions for FULL-mode silver, the merge-time CDF
+    * images ([[cdfDeltaFrame]]) for INCREMENTAL/bucketed silver — so
+    * the 100 TB silver write path and the streaming marts compose; the
+    * whole live state as inserts on first
+    * consumption) rides a REAL file stream with a persistent
+    * checkpoint through the sink, then the publish reads the live mart
+    * back ([[GoldAggOps.readMart]] / [[GoldJoinOps.readMart]]) through
+    * the shared gold gate. Because the store, checkpoints, and replay
+    * markers are exactly the streaming deployment's, an actual stream
+    * can later take over the same store through ONE explicit marker
+    * migration ([[takeoverStreamMart]] — the replay gates otherwise
+    * fail loud on a fresh checkpoint's restarted batch ids, by
+    * design); the config knob only changes WHO drives the sinks
+    * (spec-pinned equivalence: the mart equals the batch
+    * star/aggregate over the final silver state, and a live
+    * `foreachBatch` stream continues a config-built store to the same
+    * oracle — StreamingSpec).
+    *
+    * Scale shape per run: O(changed rows) delta extraction (the
+    * signature-compressed snapshot diff), one micro-batch per input
+    * through the sinks (fact batches broadcast-join batch-restricted
+    * dim slices; dim batches re-derive O(affected facts) via the
+    * two-phase restrict), and a keep-latest/re-sum read over stores
+    * bounded by compaction. Dims feed BEFORE facts so first-run facts
+    * derive against complete dim state. Preconditions fail loud, before
+    * any feed or store write: star-only equi joins, and each flat dim
+    * unique on its join keys (a 1:N fan-out cannot ride the fact-PK-keyed
+    * row store). Incremental inputs additionally carry a CDF epoch so an
+    * upstream full refresh rebuilds the mart loud instead of replaying a
+    * restarted clock; a full-mode input whose consumed version was
+    * vacuumed rebuilds the mart loud from the live versions. */
   def buildGoldStreamMart(entity: String, cfg: EntityConfig,
       g: GoldConfig,
       obs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    import GoldJoinOps.{StreamDim, StreamStar, StreamTemporal}
     val dir = goldStreamPath(entity)
     val storeDir = s"$dir/store"
     val audit = Seq(Audit.IngestedAt, Audit.SourceFile, Audit.FileModTime)
+    // PER-INPUT feed clock + delta source, dispatched on the silver
+    // layout: a FULL-mode input is clocked by its published version and
+    // diffed by changeFeed/signedChangeFeed; an INCREMENTAL (bucketed)
+    // input is clocked by its CDF high-water and fed the merge-time
+    // change images (cdfDeltaFrame) — bucketed silver has no versioned
+    // snapshots to diff, so the 100 TB write path and the streaming
+    // marts compose through the write-side CDF instead.
+    def isBucketed(e: String, layer: String = "silver"): Boolean =
+      layer == "silver" &&
+        tableProp(spark, params.silverFqn(e), BucketCountProp).nonEmpty
+    def liveVersion(e: String, layer: String = "silver"): Long =
+      if (isBucketed(e, layer)) readCdfHi(e)
+      else tableVersions(e, layer).find(_.live).map(_.version).getOrElse(
+        throw new IllegalStateException(
+          s"gold.$entity: stream-mart input '$e' has no live " +
+            s"$layer version yet - publish it before this entity"))
+    // the join star, resolved once (its key parse is the star-only guard)
+    val joinStar = if (g.aggregate.nonEmpty) None
+      else Some(streamStarFor(entity, cfg, g))
+    // FAN-OUT GUARD, before any feed or store write: the rows store is
+    // keyed by the fact PK, so a flat dim that is not unique on its join
+    // keys would keep one arbitrary survivor per fan-out (the dim sink's
+    // per-batch key check trips only inside a micro-batch, after the
+    // feeds moved). Temporal dims are change streams, non-unique on the
+    // key by design — scd2's disjoint intervals give at most one match.
+    // Validated ONCE per published dim version (dimUniqueValidated).
+    for (st <- joinStar.toSeq; (j, d) <- g.join zip st.dims
+         if j.temporal.isEmpty) {
+      val v = liveVersion(j.entity, j.layer)
+      val version = if (isBucketed(j.entity, j.layer))
+          s"cdf:${ensureCdfEpoch(j.entity)}:$v"
+        else s"v$v"
+      val memoKey = s"$storageRoot|${params.catalogName}|$entity|" +
+        s"${j.entity}|${j.layer}|$version"
+      if (!PipelineRunner.dimUniqueValidated.contains(memoKey)) {
+        val dimKeys = d.keys.map(_._2)
+        val dup = spark.read.table(martDimFqn(j))
+          .groupBy(dimKeys.map(c => col(s"`$c`")): _*)
+          .agg(count(lit(1)).as("_c")).filter(col("_c") > 1L).limit(1)
+        require(dup.isEmpty,
+          s"gold.$entity: incremental-mart dim '${j.entity}' is NOT " +
+            s"unique on its join keys (${dimKeys.mkString(", ")}) — a " +
+            "1:N fan-out cannot ride a fact-PK-keyed row store (joined " +
+            "rows would be silently dropped); deduplicate the dim's " +
+            "silver on those keys or use a full-mode batch mart")
+        PipelineRunner.dimUniqueValidated.add(memoKey)
+      }
+    }
     // DERIVATION fingerprint: the persisted store's rows were derived
     // under a specific (pk, select, join, aggregate) shape. Without
     // this, a config edit would leave every already-derived row under
@@ -3004,9 +2547,8 @@ final class PipelineRunner(
     // (or a mixed) shape while its table props claim the new config.
     // On mismatch the whole stream state (stores, feeds, checkpoints)
     // clears and rebuilds from the live versions — derived state,
-    // logged loud, self-healing; the batch full path is immune
-    // (rebuilds per run) and the batch-incremental stores carry their
-    // own consumed-version discipline.
+    // logged loud, self-healing (the batch full path is immune: it
+    // rebuilds per run).
     val derivFp = {
       val shape = (cfg.uniquePrimaryKey, g.select,
         g.join.map(j => (j.entity, j.on, j.joinType, j.layer,
@@ -3031,16 +2573,6 @@ final class PipelineRunner(
         fsS.delete(dirP, true)
       }
     }
-    // PER-INPUT feed clock + delta source, dispatched on the silver
-    // layout: a FULL-mode input is clocked by its published version and
-    // diffed by changeFeed/signedChangeFeed; an INCREMENTAL (bucketed)
-    // input is clocked by its CDF high-water and fed the merge-time
-    // change images (cdfDeltaFrame) — bucketed silver has no versioned
-    // snapshots to diff, so the 100 TB write path and the streaming
-    // marts compose through the write-side CDF instead.
-    def isBucketed(e: String, layer: String = "silver"): Boolean =
-      layer == "silver" &&
-        tableProp(spark, params.silverFqn(e), BucketCountProp).nonEmpty
     // INPUT EPOCHS: each bucketed input's CDF identity, recorded in the
     // mart dir. A silver full refresh deletes the feed and re-mints the
     // epoch — the consumed-gen clock restarted, so every derived mart
@@ -3077,6 +2609,30 @@ final class PipelineRunner(
         s"stream state at $dir and rebuilding from the live versions")
       fsS.delete(dirP, true)
     }
+    // VACUUMED consumed version: a full-mode input's next feed pair
+    // diffs from the version the feed last reached; once the retention
+    // window reclaimed it no delta exists, so rebuild loud from the
+    // live versions (the fingerprint posture) instead of failing in
+    // readVersion — correct, just not incremental this run.
+    if (fsS.exists(dirP)) {
+      val lost = ((entity, "silver") +: g.join.map(j => (j.entity, j.layer)))
+        .distinct.filterNot { case (e, l) => isBucketed(e, l) }
+        .flatMap { case (e, l) =>
+          val feedDir = s"$dir/feed_$e"
+          (feedPairs(fsS, feedDir).map(_._1) ++ feedMarker(fsS, feedDir))
+            .maxOption.filter(v => v < liveVersion(e, l) &&
+              !tableVersions(e, l).exists(_.version == v))
+            .map(v => s"$l/$e v$v")
+        }
+      if (lost.nonEmpty) {
+        log(s"gold.$entity: consumed input version(s) " +
+          s"${lost.mkString(", ")} were vacuumed - no delta exists; " +
+          s"clearing the stream state at $dir and rebuilding from the " +
+          "live versions (correct but not incremental; raise the " +
+          "retention window or run the mart more often)")
+        fsS.delete(dirP, true)
+      }
+    }
     if (!fsS.exists(fpP)) {
       fsS.mkdirs(dirP)
       StoreMarkers.writeAtomic(fsS, fpP, derivFp)
@@ -3086,12 +2642,6 @@ final class PipelineRunner(
     // transition, not a silent reinterpretation
     if (!fsS.exists(epP))
       StoreMarkers.writeAtomic(fsS, epP, epochsTxt)
-    def liveVersion(e: String, layer: String = "silver"): Long =
-      if (isBucketed(e, layer)) readCdfHi(e)
-      else tableVersions(e, layer).find(_.live).map(_.version).getOrElse(
-        throw new IllegalStateException(
-          s"gold.$entity: streaming-cadence input '$e' has no live " +
-            s"$layer version yet - publish it before this entity"))
     // None = PROVABLY EMPTY delta (maintainFeed advances the marker and
     // skips the pair write + drain): for a bucketed input that is a pure
     // fs-metadata probe (no committed CDF dir in range — empty diffs
@@ -3135,7 +2685,7 @@ final class PipelineRunner(
               compactBackstop = g.compactBackstop)))
         GoldAggOps.readMart(spark, storeDir, a)
       case None =>
-        val star = streamStarFor(entity, cfg, g)
+        val star = joinStar.get
         val dims = star.dims
         val dimFeeds: Seq[() => Unit] = (g.join zip dims).map {
           case (j, d) => () =>
@@ -3710,7 +3260,7 @@ final class PipelineRunner(
         "gold republish (content identical by construction)")
       false
     } else {
-    if (fullRefresh && g.cadence == "streaming") {
+    if (fullRefresh && g.streamMart) {
       // full refresh clears the whole stream state (stores, feed dirs,
       // checkpoints) — the next run re-feeds the live versions as
       // initial loads, exactly a fresh deployment
@@ -3727,20 +3277,14 @@ final class PipelineRunner(
       if (fs.exists(p)) fs.delete(p, true)
       val sp = new org.apache.hadoop.fs.Path(goldSuffixPath(entity))
       if (fs.exists(sp)) fs.delete(sp, true)
-      val mp = new org.apache.hadoop.fs.Path(goldMartPath(entity))
-      if (fs.exists(mp)) fs.delete(mp, true)
       log(s"gold.$entity: full refresh cleared the incremental prefix/" +
-        "suffix/mart state")
+        "suffix state")
     }
     val obs = Option.when(g.anyExpectations)(
       new org.apache.spark.sql.Observation(s"expectations_gold_$entity"))
     val frame =
-      if (g.cadence == "streaming") buildGoldStreamMart(entity, cfg, g, obs)
-      else if (g.aggregate.nonEmpty && g.mode == "incremental")
-        buildGoldAggIncremental(entity, cfg, g, obs)
+      if (g.streamMart) buildGoldStreamMart(entity, cfg, g, obs)
       else if (g.aggregate.nonEmpty) buildGoldAggFrame(entity, cfg, g, obs)
-      else if (g.join.nonEmpty && g.mode == "incremental")
-        buildGoldMartIncremental(entity, cfg, g, obs)
       else if (g.join.nonEmpty) buildGoldJoinFrame(entity, cfg, g, obs)
       else if (g.mode == "incremental")
         buildGoldFrameIncremental(entity, cfg, g, obs)
@@ -3839,11 +3383,11 @@ final class PipelineRunner(
     // soft-deletes) errs toward republishing.
     val allowSkip = !params.republishUnchanged
     // derive the CDF targets from the WHOLE config before silver runs:
-    // every incremental entity a streaming-cadence mart consumes must
+    // every incremental entity a stream-store mart consumes must
     // emit merge-time change images (see [[cdfOn]] — the epoch latch
     // keeps an enabled feed current even outside this runner)
     cdfTargets = entities.toSeq.flatMap { case (ge, cfg) =>
-      cfg.gold.toSeq.filter(_.cadence == "streaming").flatMap(g =>
+      cfg.gold.toSeq.filter(_.streamMart).flatMap(g =>
         ge +: g.join.filter(_.layer == "silver").map(_.entity))
     }.filter(e => entities.get(e).exists(_.silverMode == "incremental"))
       .toSet
@@ -4022,11 +3566,12 @@ object RunLock {
 object PipelineRunner {
 
   /** Dim join-key uniqueness validations already performed this JVM,
-    * keyed by (store root, catalog, fact, dim, dim silver VERSION).
-    * Published silver versions are immutable, so a validated version
-    * never needs re-checking; any dim change publishes a NEW version
-    * and re-validates. Bounds the fan-out guard to one Spark job per
-    * dim version instead of one per mart run. */
+    * keyed by (store root, catalog, fact, dim, dim VERSION — the
+    * published version, or the CDF epoch and high water of an
+    * incremental silver). A validated version never needs re-checking;
+    * any dim change advances the version and re-validates. Bounds the
+    * fan-out guard to one Spark job per dim version instead of one per
+    * mart run. */
   private[pipeline] val dimUniqueValidated =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 

@@ -279,17 +279,6 @@ object SimilarityOps {
     corpus.select(col(idCol).as("vec_id"), col(vecCol).as("vec"),
       lshBucket(col(vecCol), planes).as("bucket"))
 
-  /** Multi-table bucketing: one row per (vector, table), all buckets
-    * computed in ONE codegen'd pass over the vector. Recall over `tables`
-    * independent tables is 1 − (1 − p₁)^L for per-table collision
-    * probability p₁ = (1 − θ/π)^planes — the classic Charikar /
-    * Indyk-Motwani amplification. */
-  def lshAssignMulti(corpus: DataFrame, planes: Int, tables: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    corpus.select(col(idCol).as("vec_id"), col(vecCol).as("vec"),
-      posexplode(VectorExpressions.lshBuckets(col(vecCol), planes, tables))
-        .as(Seq("tbl", "bucket")))
-
   /** ANN top-k: probes join the corpus on (table, bucket) equality instead
     * of the cross product; candidates are the union over `tables` hash
     * tables, scored exactly, ranked per probe. Tune recall with

@@ -38,14 +38,6 @@ object StreamOps {
         .agg(aggs.head, aggs.tail: _*),
       "window", "win_start", "win_end")
 
-  /** T3: sliding windows (width, slide). */
-  def slidingAgg(df: DataFrame, tsCol: String, width: String, slide: String,
-      keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    flattenWindow(
-      df.groupBy(window(col(tsCol), width, slide) +: keys.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*),
-      "window", "win_start", "win_end")
-
   /** T5: session windows — events gap-merged per key while gaps < `gap`. */
   def sessionAgg(df: DataFrame, tsCol: String, gap: String,
       keys: Seq[String], aggs: Seq[Column]): DataFrame =

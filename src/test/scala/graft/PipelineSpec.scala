@@ -31,6 +31,19 @@ class PipelineSpec extends AnyFunSuite {
     s"$root/g$g"
   }
 
+  /** The live generation of one substore (`rows`, `facts`, `dim_<e>`,
+    * `agg_partials`) of an entity's stream-store mart. */
+  private def streamStore(store: String, entity: String,
+      sub: String): String =
+    liveGen(s"$store/gold_stream/$entity/store/$sub")
+
+  /** Highest micro-batch seq in a stream-store mart's rows substore —
+    * the boundary between one run's upserts and the next. */
+  private def maxRowSeq(store: String, entity: String): Long =
+    spark.read.option("mergeSchema", "true")
+      .parquet(streamStore(store, entity, "rows"))
+      .agg(max(col("_sj_seq"))).head().getLong(0)
+
   private val configJson = """{
     "app_downloads": {
       "raw_file_format": "parquet",
@@ -2887,6 +2900,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(m2.filter(r => r._2 == 2L && r._3 >= 600L)
       .forall(_._4 == 950L), "item-2 facts missed the price change")
     batch3(srcI); batch3(srcF)
+    val seq2 = maxRowSeq(storeI, "sales")
     run(srcI, storeI, "tminci", "2024-05-03 00:00:00")
     run(srcF, storeF, "tmincf", "2024-05-03 00:00:00")
     val m3 = mart("tminci")
@@ -2896,12 +2910,13 @@ class PipelineSpec extends AnyFunSuite {
       .forall(r => r._4 == 550L && r._5 == 250L),
       "late-arriving history split not re-derived")
     assert(!m3.exists(_._1 == 7L), "retracted fact survived")
-    // O(changed keys' facts): batch 3 touched item 1 only — the store
-    // append is bounded by item-1 facts + the retraction tombstone
-    val rowsRoot = s"$storeI/gold_mart/sales/rows"
+    // O(changed keys' facts): batch 3 touched item 1 only — the rows
+    // upserted by its micro-batches (seqs past run 2's) are bounded by
+    // item-1 facts + the retraction tombstone + item 1's pre-history
+    // dropout
     val stored = spark.read.option("mergeSchema", "true")
-      .parquet(liveGen(rowsRoot))
-    val batch3Rows = stored.filter($"_mart_seq" === 3L).count()
+      .parquet(streamStore(storeI, "sales", "rows"))
+    val batch3Rows = stored.filter($"_sj_seq" > seq2).count()
     val item1Facts = m3.count(_._2 == 1L)
     assert(batch3Rows <= item1Facts + 2,
       s"batch-3 upsert not O(changed keys' facts): $batch3Rows rows " +
@@ -2980,6 +2995,7 @@ class PipelineSpec extends AnyFunSuite {
 
     run(srcI, storeI, "minci", "2024-05-01 00:00:00")
     run(srcF, storeF, "mincf", "2024-05-01 00:00:00")
+    val seq1 = maxRowSeq(storeI, "sales")
     val m1 = mart("minci")
     assert(m1 == mart("mincf"), "batch-1 mart diverged from full")
     assert(!m1.exists(_._1 == 4L), "store-99 fact leaked before declared")
@@ -2998,6 +3014,7 @@ class PipelineSpec extends AnyFunSuite {
       "dim addition did not surface the waiting fact")
 
     batch3(srcI); batch3(srcF)
+    val seq2 = maxRowSeq(storeI, "sales")
     run(srcI, storeI, "minci", "2024-05-03 00:00:00")
     run(srcF, storeF, "mincf", "2024-05-03 00:00:00")
     val m3 = mart("minci")
@@ -3006,16 +3023,84 @@ class PipelineSpec extends AnyFunSuite {
     assert(!m3.exists(_._3 == 12L),
       "dim retraction left inner-join rows behind")
     // O(batch): upsert ROWS per run (parquet framing dominates bytes at
-    // this scale). Batch 1 derived all 41 facts (seq 1); batch 3
-    // touched only the retracted fact's row + store-12's fan-out
-    // (tombstones included), a fraction of the initial build
-    val perSeq = spark.read.option("mergeSchema", "true")
-      .parquet(liveGen(s"$storeI/gold_mart/sales/rows"))
-      .groupBy($"_mart_seq").count()
-      .as[(Long, Long)].collect().toMap
-    assert(perSeq(1L) >= 40L, s"batch-1 build rows: $perSeq")
-    assert(perSeq(3L) > 0L && perSeq(3L) <= perSeq(1L) / 2,
-      s"mart upsert not O(batch): rows per seq $perSeq")
+    // this scale), split at the run boundaries' max micro-batch seq.
+    // Batch 1 derived all 41 facts; batch 3 touched only the retracted
+    // fact's row + store-12's fan-out (tombstones included), a fraction
+    // of the initial build
+    val stored = spark.read.option("mergeSchema", "true")
+      .parquet(streamStore(storeI, "sales", "rows"))
+    val build = stored.filter($"_sj_seq" <= seq1).count()
+    val b3 = stored.filter($"_sj_seq" > seq2).count()
+    assert(build >= 40L, s"batch-1 build rows: $build")
+    assert(b3 > 0L && b3 <= build / 2,
+      s"mart upsert not O(batch): batch-3 rows $b3 vs build $build")
+  }
+
+  test("incremental join mart over a VACUUMED consumed version (zero " +
+      "retention): the stream state rebuilds loud from the live " +
+      "versions and the mart still equals the full recompute") {
+    def cfgJson(mode: String) = s"""{"sales": {
+      |  "raw_file_format": "parquet",
+      |  "unique_primary_key": ["sale_id"],
+      |  "gold": {"mode": "$mode",
+      |    "join": [{"entity": "stores", "on": "store_id = s_id",
+      |              "broadcast": true}],
+      |    "select": ["sale_id", "amount", "s_city AS city"]}
+      |},
+      |"stores": {"raw_file_format": "parquet",
+      |           "unique_primary_key": ["s_id"]}}""".stripMargin
+    def setup(mode: String, tag: String): (String, String) = {
+      val src = tmpDir(s"martvac$tag-src")
+      val store = tmpDir(s"martvac$tag-store")
+      Files.writeString(Path.of(src, "dp_config_template.json"),
+        cfgJson(mode))
+      (0 until 12).map(i => (i.toLong, 100L + i, 10L + (i % 2)))
+        .toDF("sale_id", "amount", "store_id").write.parquet(s"$src/sales")
+      Seq((10L, "lima"), (11L, "oslo")).toDF("s_id", "s_city")
+        .write.parquet(s"$src/stores")
+      (src, store)
+    }
+    val (srcI, storeI) = setup("incremental", "i")
+    val (srcF, storeF) = setup("full", "f")
+    // zero retention: every publish vacuums the version it superseded,
+    // so the version each feed last consumed is gone by the gold phase
+    def run(src: String, store: String, cat: String, clock: String)
+        : PipelineRunner = {
+      val r = new PipelineRunner(spark, PipelineParams(sourceLocation = src,
+        catalogName = cat, fixedIngestedAt = Some(Timestamp.valueOf(clock)),
+        republishUnchanged = true,
+        deletedFileRetention = "interval 0 seconds"), store)
+      r.run(ConfigLoader.load(spark, src))
+      r
+    }
+    def mart(cat: String): Seq[(Long, Long, String)] = {
+      val p = PipelineParams(sourceLocation = "", catalogName = cat)
+      spark.table(p.goldFqn("sales"))
+        .select($"sale_id", $"amount", $"city")
+        .as[(Long, Long, String)].collect().sortBy(_._1).toSeq
+    }
+    run(srcI, storeI, "martvaci", "2024-05-01 00:00:00")
+    run(srcF, storeF, "martvacf", "2024-05-01 00:00:00")
+    assert(mart("martvaci") == mart("martvacf"), "batch-1 mart diverged")
+    for (b <- 2 to 3) {
+      for (src <- Seq(srcI, srcF)) {
+        Seq((b.toLong, 900L + b, 11L), (100L + b, 50L, 10L))
+          .toDF("sale_id", "amount", "store_id")
+          .write.mode("append").parquet(s"$src/sales")
+        Seq((11L, s"city$b")).toDF("s_id", "s_city")
+          .write.mode("append").parquet(s"$src/stores")
+      }
+      val r = run(srcI, storeI, "martvaci", s"2024-05-0$b 00:00:00")
+      run(srcF, storeF, "martvacf", s"2024-05-0$b 00:00:00")
+      // the precondition held: only the live versions are on disk
+      assert(r.tableVersions("sales").map(_.version) ==
+        r.tableVersions("sales").filter(_.live).map(_.version),
+        "the consumed silver version was not vacuumed")
+      val m = mart("martvaci")
+      assert(m == mart("martvacf"), s"batch-$b mart diverged")
+      assert(m.filter(_._1 < 100L).exists(_._3 == s"city$b"),
+        s"batch-$b dim update missing")
+    }
   }
 
   test("incremental aggregate mart (gold.mode incremental + " +
@@ -3077,16 +3162,13 @@ class PipelineSpec extends AnyFunSuite {
     run(srcF, storeF, "aggf", "2024-06-02 00:00:00")
     assert(mart("aggi") == mart("aggf"), "batch-2 mart diverged from full")
     // O(delta): the batch-2 partial touches ≤ 4 groups, not all rows.
-    // The store lives in generation subdirs (g0, g1, …) named by the
-    // _agg_gen marker — compaction commits a fresh generation before
-    // dropping the old one (crash-safe swap, never an in-place
-    // overwrite).
-    val partialsBase = s"$storeI/gold_mart/sales/agg_partials"
-    def liveGenDir(): java.io.File = {
-      val m = Path.of(storeI, "gold_mart", "sales", "_agg_gen")
-      val g = if (Files.exists(m)) Files.readString(m).trim else "0"
-      new java.io.File(s"$partialsBase/g$g")
-    }
+    // The stream store's partials live in generation subdirs (g0, g1,
+    // …) named by their _gen marker — compaction commits a fresh
+    // generation before dropping the old one (crash-safe swap, never
+    // an in-place overwrite).
+    val partialsBase = s"$storeI/gold_stream/sales/store/agg_partials"
+    def liveGenDir(): java.io.File =
+      new java.io.File(streamStore(storeI, "sales", "agg_partials"))
     val files = liveGenDir().listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.lastModified)
     assert(files.length == 2, s"expected 2 batch partials: ${files.toSeq}")
@@ -3116,10 +3198,10 @@ class PipelineSpec extends AnyFunSuite {
       == idleBefore, "idle republish appended a partial batch")
     assert(mart("aggi") == m3, "idle republish changed the mart")
     // compaction: REAL single-row update batches accumulate until the
-    // 16-file threshold triggers a SIZE-TIERED fold (smallest runs
-    // merge; up to threshold/2 recent runs carry forward) — the store
-    // stays bounded near the threshold and the published mart is
-    // invariant under the rewrite. Plant
+    // 16-file threshold triggers the re-sum rewrite (the first one is
+    // due at once: no size baseline yet) — the store stays bounded at
+    // the threshold and the published mart is invariant under the
+    // rewrite. Plant
     // root-level bystanders the sweep must NOT delete: a FILE named
     // like a generation and a DIRECTORY named bare "g" (the sweep may
     // only remove g<digits> DIRECTORIES this store minted)
@@ -3142,9 +3224,9 @@ class PipelineSpec extends AnyFunSuite {
     val after = liveGenDir().listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(after <= 16, s"store not bounded at the threshold: $after files")
-    // ≥ 2 files pins that the fold was TIERED (recent runs carried
-    // forward by copy), not an every-time full rewrite
-    assert(after >= 2, s"expected a tiered fold, got full rewrite: $after")
+    // 18 one-file appends: the 17th folds all 17 into one re-summed
+    // run, the 18th appends beside it in the new generation
+    assert(after == 2, s"expected one rewritten run + 1 append: $after")
     // the swap repointed the marker to a NEW generation and dropped the
     // superseded one — exactly one generation dir survives
     assert(liveGenDir().getName != "g0", "compaction did not advance " +
@@ -3155,56 +3237,75 @@ class PipelineSpec extends AnyFunSuite {
       s"superseded generations not swept: $gens")
     assert(mart("aggi") == mart("aggf"),
       "compaction-era mart diverged from the full recompute")
-    // LEGACY-LAYOUT MIGRATION: the pre-generation store kept partials
-    // directly under agg_partials/ with no _agg_gen marker. Simulate
-    // that layout from the live store, run another batch, and the
-    // accumulated history must survive (an unmigrated run would
-    // publish only the new delta — silent truncation)
-    val live = liveGenDir()
-    live.listFiles().foreach { f =>
-      Files.move(f.toPath, Path.of(partialsBase, f.getName))
-    }
-    live.delete()
-    Files.deleteIfExists(
-      Path.of(storeI, "gold_mart", "sales", "_agg_gen"))
-    def batch4(src: String): Unit =
-      Seq((200L, java.lang.Double.valueOf(5.5), 12L))
-        .toDF("sale_id", "amount", "store_id")
-        .write.mode("append").parquet(s"$src/sales")
-    batch4(srcI); batch4(srcF)
-    run(srcI, storeI, "aggi", "2024-06-20 00:00:00")
-    run(srcF, storeF, "aggf", "2024-06-20 00:00:00")
-    assert(mart("aggi") == mart("aggf"),
-      "legacy partial store not migrated — history truncated")
-    // migration absorbed the flat files into a generation dir (a
-    // post-migration tiered fold may legitimately advance past g0)
-    assert(liveGenDir().getName.matches("g\\d+") &&
-      liveGenDir().listFiles().exists(_.getName.endsWith(".parquet")),
-      "migration did not absorb legacy files into a generation dir")
-    assert(!new java.io.File(partialsBase).listFiles()
-      .exists(f => f.isFile && f.getName.startsWith("part-")),
-      "legacy flat files left behind at the store root")
   }
 
-  test("incremental aggregate mart guards: bucketed silver fails loud; " +
-      "aggregate+join config is rejected") {
-    val src = tmpDir("agggd-src"); val store = tmpDir("agggd-store")
-    Files.writeString(Path.of(src, "dp_config_template.json"),
-      """{"sales": {
-        |  "raw_file_format": "parquet",
-        |  "unique_primary_key": ["sale_id"],
-        |  "silver_mode": "incremental",
-        |  "gold": {"mode": "incremental",
-        |    "aggregate": {"group_by": ["store_id"],
-        |      "aggs": [{"op": "count", "as": "n"}]}}
-        |}}""".stripMargin)
-    Seq((1L, 1.0, 10L)).toDF("sale_id", "amount", "store_id")
-      .write.parquet(s"$src/sales")
-    val boom = intercept[IllegalArgumentException] {
-      mkRunner(src, store, "2024-06-01 00:00:00", catalog = "agggd")._1
-        .run(ConfigLoader.load(spark, src))
+  test("incremental aggregate mart over INCREMENTAL silver: the " +
+      "merge-time change feed keeps it equal to the full recompute " +
+      "across CDC batches; aggregate+join config is rejected") {
+    def cfgJson(mode: String) = s"""{"sales": {
+      |  "raw_file_format": "parquet",
+      |  "unique_primary_key": ["sale_id"],
+      |  "silver_mode": "incremental", "silver_buckets": 4,
+      |  "expect_all_or_drop": {"amt_ok": "amount IS NOT NULL"},
+      |  "gold": {"mode": "$mode",
+      |    "aggregate": {"group_by": ["store_id"],
+      |      "aggs": [{"op": "count", "as": "n"},
+      |               {"op": "sum_x1e6", "expr": "amount", "as": "amt"}]}}
+      |}}""".stripMargin
+    def setup(mode: String, tag: String): (String, String) = {
+      val src = tmpDir(s"aggis$tag-src"); val store = tmpDir(s"aggis$tag-store")
+      Files.writeString(Path.of(src, "dp_config_template.json"),
+        cfgJson(mode))
+      (0 until 20).map(i =>
+        (i.toLong, java.lang.Double.valueOf(i + 0.5), 10L + (i % 3)))
+        .toDF("sale_id", "amount", "store_id").write.parquet(s"$src/sales")
+      (src, store)
     }
-    assert(boom.getMessage.contains("full-mode silver"), boom.getMessage)
+    val (srcI, storeI) = setup("incremental", "i")
+    val (srcF, storeF) = setup("full", "f")
+    def run(src: String, store: String, cat: String, clock: String): Unit =
+      mkRunner(src, store, clock, catalog = cat, republish = true)._1
+        .run(ConfigLoader.load(spark, src))
+    def mart(cat: String): Seq[(Long, Long, Long)] = {
+      val p = PipelineParams(sourceLocation = "", catalogName = cat)
+      spark.table(p.goldFqn("sales")).select($"store_id", $"n", $"amt")
+        .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+    }
+    run(srcI, storeI, "aggisi", "2024-06-01 00:00:00")
+    run(srcF, storeF, "aggisf", "2024-06-01 00:00:00")
+    assert(mart("aggisi") == mart("aggisf"), "batch-1 mart diverged")
+    // batch 2: insert, in-group update, cross-group move, retraction
+    // (store 13 appears; sale 3's retraction leaves its group smaller)
+    for (src <- Seq(srcI, srcF))
+      Seq((100L, java.lang.Double.valueOf(9.25), 13L),
+          (1L, java.lang.Double.valueOf(111.0), 11L),
+          (2L, java.lang.Double.valueOf(2.25), 10L),
+          (3L, null.asInstanceOf[java.lang.Double], 10L))
+        .toDF("sale_id", "amount", "store_id")
+        .write.mode("append").parquet(s"$src/sales")
+    run(srcI, storeI, "aggisi", "2024-06-02 00:00:00")
+    run(srcF, storeF, "aggisf", "2024-06-02 00:00:00")
+    val m2 = mart("aggisi")
+    assert(m2 == mart("aggisf"), "batch-2 mart diverged")
+    assert(m2.exists(_._1 == 13L), "new group missing")
+    // batch 3: retract store 13's only sale -> the group must VANISH
+    for (src <- Seq(srcI, srcF))
+      Seq((100L, null.asInstanceOf[java.lang.Double], 13L))
+        .toDF("sale_id", "amount", "store_id")
+        .write.mode("append").parquet(s"$src/sales")
+    run(srcI, storeI, "aggisi", "2024-06-03 00:00:00")
+    run(srcF, storeF, "aggisf", "2024-06-03 00:00:00")
+    val m3 = mart("aggisi")
+    assert(m3 == mart("aggisf"), "batch-3 mart diverged")
+    assert(!m3.exists(_._1 == 13L), "emptied group survived retraction")
+    // the mart consumed the merge-time CDF through the stream store,
+    // and the runner vacuumed every CDF batch it drained
+    assert(new java.io.File(s"$storeI/gold_stream/sales/feed_sales/_consumed")
+      .exists(), "incremental mart did not run on the stream store")
+    val cdf = new java.io.File(s"$storeI/silver/sales/_cdf")
+    assert(cdf.exists() && !cdf.listFiles().exists(f =>
+      f.isDirectory && f.getName.startsWith("b")),
+      s"drained CDF batches not vacuumed: ${cdf.listFiles().toSeq}")
     val cfgBoom = intercept[IllegalArgumentException] {
       graft.config.GoldConfig(
         join = Seq(graft.config.GoldJoin("x", "a = b")),
@@ -3214,8 +3315,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(cfgBoom.getMessage.contains("mutually exclusive"))
   }
 
-  test("incremental join mart guards: snowflake chains and bucketed " +
-      "dims fail loud") {
+  test("incremental join mart guards: snowflake chains fail loud") {
     val src = tmpDir("martg-src"); val store = tmpDir("martg-store")
     Files.writeString(Path.of(src, "dp_config_template.json"),
       """{"sales": {
@@ -3651,7 +3751,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(!m2.exists(_._1 == 20L), "retracted fact survived")
     assert(m2.filter(_._3 == 11L).forall(_._4 == "bern"),
       "dim update not re-derived")
-    val rowsRoot = s"$storeI/gold_mart/sales/rows"
+    val rowsRoot = s"$storeI/gold_stream/sales/store/rows"
     val genM = Path.of(rowsRoot, "_gen")
     assert(Files.exists(genM) && Files.readString(genM).trim.toLong >= 1L,
       "mart row store never compacted")

@@ -11,15 +11,15 @@ import graft.pipeline.PipelineRunner
 
 /** Long-history evidence for the incremental-gold store compaction
   * (SCALE.md): drives MANY small CDC batches through the
-  * incrementally-maintained join mart twice — once with compaction
-  * effectively off (compact_after=65536) and once at the default-ish
-  * threshold — and reports per-batch publish wall time plus the row
+  * incrementally-maintained join mart (the stream store's `rows/`
+  * substore) three times — once with compaction effectively off
+  * (compact_after=65536), then at thresholds 4 and 16 — and reports per-batch publish wall time plus the row
   * store's file count and bytes at the end. Without compaction the
   * keep-latest store grows with TOTAL updates, so the per-publish
   * window re-sorts an ever-longer history and the trend line rises;
   * with compaction the store stays bounded at O(live rows) + at most
   * `threshold` fresh batches and the trend flattens. The published
-  * mart is asserted IDENTICAL between the two runs at the end (the
+  * mart is asserted IDENTICAL across the three runs at the end (the
   * rewrite-invariance claim, at tool scale).
   *
   * Usage: Test/runMain graft.tools.GoldCompactBench [sfDir] [batches]
@@ -101,7 +101,7 @@ object GoldCompactBench {
           .write.mode("append").parquet(s"$root/src/orders")
         runAt(b)
       }
-      val (nf, bytes) = storeStats(s"$root/store/gold_mart/orders/rows")
+      val (nf, bytes) = storeStats(s"$root/store/gold_stream/orders/store/rows")
       val head = times.take(5).sum / 5
       val tail = times.takeRight(5).sum / 5
       println(f"[$label] batches 2-$nBatches: first5 avg $head%.2f s, " +
