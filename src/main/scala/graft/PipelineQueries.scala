@@ -436,10 +436,10 @@ object PipelineQueries {
     // -- [EXT]: the medallion -> STREAMING-mart composition on the gate
     //    (gold.cadence: "streaming"): the SAME 3-wave CDC flow as
     //    q_gold_join_incr, but the declared gold is maintained by the
-    //    stream-store sinks — each triggered run bridges the published
-    //    silver versions through changeFeed into GoldJoinOps.dimSink/
-    //    factSink over a REAL file stream with persistent checkpoints,
-    //    then publishes the keep-latest mart. The oracle is the SAME
+    //    stream-store sinks — each triggered run takes the published
+    //    silver versions' changeFeed deltas and calls the batch bodies
+    //    of GoldJoinOps.dimSink/factSink on them directly, then
+    //    publishes the keep-latest mart. The oracle is the SAME
     //    final-state star SQL: keep-latest fact updates, the expectation
     //    retraction wave, and the dim attribute wave must converge to
     //    the incremental mart exactly, with the whole stream-store
@@ -1077,7 +1077,7 @@ object PipelineQueries {
         |ORDER BY o_orderkey""".stripMargin,
 
     // the SAME final-state star SQL: the config-declared STREAMING mart
-    // (changeFeed bridge -> file-stream sinks -> keep-latest publish)
+    // (changeFeed deltas -> direct sink batches -> keep-latest publish)
     // must converge to the incremental mart exactly
     "q_stream_medallion" ->
       """SELECT o_orderkey,

@@ -180,15 +180,15 @@ final case class GoldConfig(
       * mart rebuilds per triggered run, or is maintained incrementally
       * when `mode` is `"incremental"`. `"streaming"`: the mart state
       * lives in the stream-store layout and is maintained by the SAME
-      * `foreachBatch` sinks a live micro-batch stream would drive
-      * ([[graft.pipeline.GoldAggOps.goldAggSink]] /
-      * [[graft.pipeline.GoldJoinOps]]); each triggered run feeds the
-      * input deltas (`changeFeed` / `signedChangeFeed` between published
-      * versions of full-mode silver, the merge-time change data feed of
-      * incremental silver) through a REAL file stream with a persistent
-      * checkpoint, so a deployment can later point an actual stream at
-      * the same store. `mode: "incremental"` on a join or aggregate mart
-      * runs this same engine ([[streamMart]]), so set one of the two.
+      * batch bodies a live micro-batch stream's `foreachBatch` sinks
+      * drive ([[graft.pipeline.GoldAggOps.goldAggSink]] /
+      * [[graft.pipeline.GoldJoinOps]]); each triggered run calls them
+      * directly on the input deltas (`changeFeed` / `signedChangeFeed`
+      * between published versions of full-mode silver, the merge-time
+      * change data feed of incremental silver), so a deployment can
+      * later point an actual stream at the same store. `mode:
+      * "incremental"` on a join or aggregate mart runs this same engine
+      * ([[streamMart]]), so set one of the two.
       * Requires `aggregate` or `join` (curation gold has no streaming
       * sink). */
     cadence: String = "batch",

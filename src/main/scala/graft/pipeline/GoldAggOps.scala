@@ -26,8 +26,8 @@ import graft.config.GoldAggregate
   * across processes), and the one unsafe window (crash between the
   * append and the marker update) leaves bit-identical duplicate rows
   * that the read side drops on (`_batch_id`, groups) — batch content
-  * at a given id is pinned by the checkpoint offset log, so duplicates
-  * are exact copies. Net
+  * at a given id is pinned (by a live stream's offset log, or by the
+  * triggered run's `_pin`), so duplicates are exact copies. Net
   * effect: additive totals stay exactly-once without a transactional
   * sink. Compaction folds the DEDUPED view to one row per group
   * stamped with the max folded batch id (the high-water mark survives
@@ -141,6 +141,9 @@ object GoldAggOps {
           "rebuild the store"))
     }
 
+  private[pipeline] def lastBatchMarker(storeDir: String): Path =
+    new Path(s"$storeDir/_last_batch")
+
   private def writeMarker(fs: org.apache.hadoop.fs.FileSystem, p: Path,
       batchId: Long, queryId: Option[String]): Unit =
     StoreMarkers.writeAtomic(fs, p,
@@ -188,7 +191,7 @@ object GoldAggOps {
       a: GoldAggregate): Unit = {
     val fs = new Path(storeDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val markerP = new Path(s"$storeDir/_last_batch")
+    val markerP = lastBatchMarker(storeDir)
     RunLock.withLock(spark, storeDir) {
       readMarker(fs, markerP).foreach { _ =>
         val store = new GenStore(fs, s"$storeDir/agg_partials", _ => ())
@@ -210,10 +213,8 @@ object GoldAggOps {
     * — every row +1) aggregate to per-group partials appended into a
     * [[GenStore]]. Read the live mart with [[readMart]]; totals equal
     * the full batch aggregate over the same final state by
-    * associativity (StreamingSpec and PipelineSpec twin-pin it).
-    *
-    * Doc-header contract: batch-id marker skip + read-side exact-dup
-    * drop make the additive totals replay-safe. */
+    * associativity (StreamingSpec and PipelineSpec twin-pin it). A thin
+    * wrapper over [[aggBatch]]. */
   def goldAggSink(stream: DataFrame, a: GoldAggregate, storeDir: String,
       checkpoint: String, signCol: Option[String] = None,
       compactAfter: Int = 16, compactBackstop: Int = 64)
@@ -221,50 +222,65 @@ object GoldAggOps {
         org.apache.spark.sql.Row] = {
     require(compactAfter >= 1 && compactAfter <= 65536,
       s"compactAfter must be in [1, 2^16], got $compactAfter")
-    stream.writeStream
-      .outputMode("update")
+    batchSink(stream, checkpoint)(aggBatch(_, _, _, a, storeDir, signCol,
+      compactAfter, compactBackstop))
+  }
+
+  /** An update-mode `foreachBatch` sink that hands `body` each
+    * micro-batch, its id and the checkpoint's query identity (the
+    * replay gates' feed fingerprint, [[StoreMarkers.queryId]]). */
+  private[pipeline] def batchSink(stream: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long, Option[String]) => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[
+        org.apache.spark.sql.Row] =
+    stream.writeStream.outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new Path(storeDir).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val markerP = new Path(s"$storeDir/_last_batch")
-        val qid = StoreMarkers.queryId(spark, checkpoint)
-        // store-scoped cross-process lock + identity-checked replay
-        // gate (the GoldJoinOps contract): an at-or-below batch id from
-        // the SAME query identity is an at-least-once replay (skip);
-        // from a DIFFERENT identity it is a re-checkpointed feed whose
-        // restarted batch ids would silently drop until they climb past
-        // the marker — fail loud instead. Two concurrent feeds minting
-        // the same (_batch_id, group) with DIFFERENT content would
-        // corrupt the read-side dedup, so the lock serializes and the
-        // gate then rejects the latecomer.
-        RunLock.withLock(spark, storeDir) {
-        val proceed = replayGate(fs, markerP, batchId, qid,
-          s"goldAggSink at $storeDir")
-        if (proceed) {
-          val store = new GenStore(fs, s"$storeDir/agg_partials",
-            _ => ())
-          val sign = signCol.map(c => col(s"`$c`").cast("long"))
-            .getOrElse(lit(1L))
-          val es = partialExprs(a, sign)
-          val partial = batch.groupBy(groupCols(a): _*)
-            .agg(es.head, es.tail: _*)
-            .withColumn("_batch_id", lit(batchId))
-          writeSizeScaled(partial, a.groupBy, "append", store.dataDir)
-          writeMarker(fs, markerP, batchId, qid)
-          store.compact(compactAfter, s"stream agg store $storeDir",
-            compactBackstop) {
-            from =>
-              sumPartials(spark, from, a, dedupBatches = true)
-                .withColumn("_batch_id", lit(batchId))
-          } { (df, to) =>
-            writeSizeScaled(df, a.groupBy, "overwrite", to)
-          }
-        }
-        }
-        ()
+        body(batch, batchId,
+          StoreMarkers.queryId(batch.sparkSession, checkpoint))
       }
       .option("checkpointLocation", checkpoint)
+
+  /** One aggregate batch, gated on (`batchId`, `qid`) — the body of
+    * [[goldAggSink]], also called directly by the triggered run.
+    * Batch-id marker skip + read-side exact-dup drop make the additive
+    * totals replay-safe (the object doc). */
+  def aggBatch(batch: DataFrame, batchId: Long, qid: Option[String],
+      a: GoldAggregate, storeDir: String, signCol: Option[String],
+      compactAfter: Int, compactBackstop: Int): Unit = {
+    val spark = batch.sparkSession
+    val fs = new Path(storeDir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val markerP = lastBatchMarker(storeDir)
+    // store-scoped cross-process lock + identity-checked replay gate
+    // (the GoldJoinOps contract): an at-or-below batch id from the SAME
+    // query identity is an at-least-once replay (skip); from a
+    // DIFFERENT identity it is a re-checkpointed feed whose restarted
+    // batch ids would silently drop until they climb past the marker —
+    // fail loud instead. Two concurrent feeds minting the same
+    // (_batch_id, group) with DIFFERENT content would corrupt the
+    // read-side dedup, so the lock serializes and the gate then rejects
+    // the latecomer.
+    RunLock.withLock(spark, storeDir) {
+      if (replayGate(fs, markerP, batchId, qid,
+          s"goldAggSink at $storeDir")) {
+        val store = new GenStore(fs, s"$storeDir/agg_partials", _ => ())
+        val sign = signCol.map(c => col(s"`$c`").cast("long"))
+          .getOrElse(lit(1L))
+        val es = partialExprs(a, sign)
+        val partial = batch.groupBy(groupCols(a): _*)
+          .agg(es.head, es.tail: _*)
+          .withColumn("_batch_id", lit(batchId))
+        writeSizeScaled(partial, a.groupBy, "append", store.dataDir)
+        writeMarker(fs, markerP, batchId, qid)
+        store.compact(compactAfter, s"stream agg store $storeDir",
+          compactBackstop) { from =>
+          sumPartials(spark, from, a, dedupBatches = true)
+            .withColumn("_batch_id", lit(batchId))
+        } { (df, to) =>
+          writeSizeScaled(df, a.groupBy, "overwrite", to)
+        }
+      }
+    }
   }
 
   /** SESSION-GRAIN streaming mart (T5 at mart cadence) — the

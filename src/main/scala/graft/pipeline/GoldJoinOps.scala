@@ -50,13 +50,16 @@ import org.apache.spark.sql.functions._
   * silently dropping data. The one unsafe window (crash between append
   * and marker) re-appends bit-identical rows at the SAME seq (the seq
   * derives from the markers, not a counter advanced mid-batch), which
-  * the keep-latest read collapses. Writer concurrency: ONE sink
-  * processes a micro-batch at a time per store — a per-store JVM lock
-  * serializes the fact and dim queries on one SparkSession (the
-  * deployment pattern), and a store-scoped [[RunLock]] (heartbeat +
-  * stale-break, held per micro-batch) makes a sink in a SECOND process
-  * fail loud rather than interleave marker reads and mint duplicate
-  * seqs.
+  * the keep-latest read collapses — provided a replayed batch id
+  * carries the same rows (a live stream's offset log pins that; the
+  * triggered run pins each delta's version range before its first
+  * sink call and calls [[factBatch]] / [[dimBatch]] directly). Writer
+  * concurrency: ONE sink processes a micro-batch at a time per store —
+  * a per-store JVM lock serializes the fact and dim queries on one
+  * SparkSession (the deployment pattern), and a store-scoped
+  * [[RunLock]] (heartbeat + stale-break, held per micro-batch) makes a
+  * sink in a SECOND process fail loud rather than interleave marker
+  * reads and mint duplicate seqs.
   *
   * Scale: per fact batch one broadcast-dim join over O(batch) rows;
   * per dim batch two column-pruned fact-store scans + a re-join over
@@ -233,10 +236,15 @@ object GoldJoinOps {
       case _ => true
     }
 
+  private[pipeline] def factMarker(storeDir: String): Path =
+    new Path(s"$storeDir/_fact_marker")
+
+  private[pipeline] def dimMarker(storeDir: String, name: String): Path =
+    new Path(s"$storeDir/_dim_${name}_marker")
+
   private def markerPaths(storeDir: String, star: StreamStar)
       : Seq[Path] =
-    new Path(s"$storeDir/_fact_marker") +:
-      star.dims.map(d => new Path(s"$storeDir/_dim_${d.name}_marker"))
+    factMarker(storeDir) +: star.dims.map(d => dimMarker(storeDir, d.name))
 
   /** SANCTIONED TAKEOVER MIGRATION (see
     * [[Pipeline.PipelineRunner.takeoverStreamMart]] for the operator
@@ -414,37 +422,43 @@ object GoldJoinOps {
 
   /** FACT-side sink: per micro-batch, upsert the fact store and derive
     * the batch's mart rows against the current dim states. The feed
-    * must carry at most one row per fact PK per batch (fail-loud). */
+    * must carry at most one row per fact PK per batch (fail-loud). A
+    * thin wrapper over [[factBatch]]. */
   def factSink(stream: DataFrame, star: StreamStar, storeDir: String,
       checkpoint: String, compactAfter: Int = 16)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] = {
     require(compactAfter >= 1, s"compactAfter must be >= 1")
-    stream.writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        lockFor(storeDir).synchronized {
-        val spark = batch.sparkSession
-        val fs = fsOf(spark, storeDir)
-        val markerP = new Path(s"$storeDir/_fact_marker")
-        val qid = StoreMarkers.queryId(spark, checkpoint)
-        // cross-PROCESS single-writer enforcement (the JVM monitor
-        // above only covers the one-SparkSession deployment): the
-        // store-scoped RunLock makes a second process's sink fail loud
-        // instead of interleaving marker reads and minting duplicate
-        // seqs. The replay gate reads INSIDE the lock — a rival's
-        // commit between gate and lock would otherwise be invisible.
-        RunLock.withLock(spark, storeDir) {
+    GoldAggOps.batchSink(stream, checkpoint)(
+      factBatch(_, _, _, star, storeDir, compactAfter))
+  }
+
+  /** One fact batch, gated on (`batchId`, `qid`) — the body of
+    * [[factSink]], also called directly by the triggered run. */
+  def factBatch(batch: DataFrame, batchId: Long, qid: Option[String],
+      star: StreamStar, storeDir: String, compactAfter: Int): Unit =
+    lockFor(storeDir).synchronized {
+      val spark = batch.sparkSession
+      val fs = fsOf(spark, storeDir)
+      val markerP = factMarker(storeDir)
+      // cross-PROCESS single-writer enforcement (the JVM monitor above
+      // only covers the one-SparkSession deployment): the store-scoped
+      // RunLock makes a second process's sink fail loud instead of
+      // interleaving marker reads and minting duplicate seqs. The replay
+      // gate reads INSIDE the lock — a rival's commit between gate and
+      // lock would otherwise be invisible.
+      RunLock.withLock(spark, storeDir) {
         if (replayGate(fs, markerP, batchId, qid,
             s"streaming join mart factSink at $storeDir")) {
-          requireUnique(batch, star.pkCols,
-            s"streaming join mart factSink at $storeDir")
           val seq = nextSeq(fs, storeDir, star)
           val del = star.factDeleteCol
             .map(c => coalesce(col(s"`$c`"), lit(false)))
             .getOrElse(lit(false))
           val stamped = batch.withColumn(Live, !del).withColumn(Seq_,
               lit(seq)).drop(star.factDeleteCol.toSeq: _*)
-            .localCheckpoint(false) // feeds the store AND the derive
+            .localCheckpoint(false) // feeds the check, store AND derive
+          requireUnique(stamped, star.pkCols,
+            s"streaming join mart factSink at $storeDir")
           val fstore = store(fs, s"$storeDir/facts")
           GoldAggOps.writeSizeScaled(stamped, star.pkCols, "append",
             fstore.dataDir)
@@ -464,19 +478,15 @@ object GoldJoinOps {
           compactKeepLatest(spark, fstore, star.pkCols, compactAfter,
             s"stream mart facts $storeDir")
         }
-        }
-        }
-        ()
       }
-      .option("checkpointLocation", checkpoint)
-  }
+    }
 
   /** DIM-side sink for dim `name`: per micro-batch, upsert the dim
     * store, then re-derive exactly the facts whose join keys the batch
     * touched ([[affectedFacts]]' two-phase semi-join — O(affected
     * facts' history), never a table re-join or full-store window). The
     * feed must carry at most one row per join key per batch
-    * (fail-loud). */
+    * (fail-loud). A thin wrapper over [[dimBatch]]. */
   def dimSink(stream: DataFrame, name: String, star: StreamStar,
       storeDir: String, checkpoint: String, compactAfter: Int = 16)
       : org.apache.spark.sql.streaming.DataStreamWriter[
@@ -485,19 +495,23 @@ object GoldJoinOps {
       throw new IllegalArgumentException(
         s"dimSink: '$name' is not a dim of this star " +
           s"(${star.dims.map(_.name).mkString(", ")})"))
-    val dimKeys = d.storeKeys
-    stream.writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        lockFor(storeDir).synchronized {
-        val spark = batch.sparkSession
-        val fs = fsOf(spark, storeDir)
-        val markerP = new Path(s"$storeDir/_dim_${name}_marker")
-        val qid = StoreMarkers.queryId(spark, checkpoint)
-        RunLock.withLock(spark, storeDir) {
+    GoldAggOps.batchSink(stream, checkpoint)(
+      dimBatch(_, _, _, d, star, storeDir, compactAfter))
+  }
+
+  /** One batch of dim `d`, gated on (`batchId`, `qid`) — the body of
+    * [[dimSink]], also called directly by the triggered run. */
+  def dimBatch(batch: DataFrame, batchId: Long, qid: Option[String],
+      d: StreamDim, star: StreamStar, storeDir: String,
+      compactAfter: Int): Unit =
+    lockFor(storeDir).synchronized {
+      val spark = batch.sparkSession
+      val fs = fsOf(spark, storeDir)
+      val markerP = dimMarker(storeDir, d.name)
+      val dimKeys = d.storeKeys
+      RunLock.withLock(spark, storeDir) {
         if (replayGate(fs, markerP, batchId, qid,
-            s"streaming join mart dimSink($name) at $storeDir")) {
-          requireUnique(batch, dimKeys,
-            s"streaming join mart dimSink($name) at $storeDir")
+            s"streaming join mart dimSink(${d.name}) at $storeDir")) {
           val seq = nextSeq(fs, storeDir, star)
           val del = d.deleteCol
             .map(c => coalesce(col(s"`$c`"), lit(false)))
@@ -505,7 +519,9 @@ object GoldJoinOps {
           val stamped = batch.withColumn(Live, !del)
             .withColumn(Seq_, lit(seq)).drop(d.deleteCol.toSeq: _*)
             .localCheckpoint(false)
-          val dstore = store(fs, s"$storeDir/dim_$name")
+          requireUnique(stamped, dimKeys,
+            s"streaming join mart dimSink(${d.name}) at $storeDir")
+          val dstore = store(fs, s"$storeDir/dim_${d.name}")
           GoldAggOps.writeSizeScaled(stamped, dimKeys, "append",
             dstore.dataDir)
           // affected facts: the batch's touched keys restrict the fact
@@ -521,14 +537,10 @@ object GoldJoinOps {
             }
           writeMarker(fs, markerP, batchId, seq, qid)
           compactKeepLatest(spark, dstore, dimKeys, compactAfter,
-            s"stream mart dim $name $storeDir")
+            s"stream mart dim ${d.name} $storeDir")
         }
-        }
-        }
-        ()
       }
-      .option("checkpointLocation", checkpoint)
-  }
+    }
 
   /** The live fact rows a dim batch's `touched` join keys affect — the
     * TWO-PHASE restriction that keeps the dim path O(affected facts),

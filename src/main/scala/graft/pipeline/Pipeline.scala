@@ -957,7 +957,7 @@ final class PipelineRunner(
           bucketCol = Some(BucketCol))
           .withColumn(RetractedCol, lit(false))
         // CDF: a batch-0 base build writes NO images — every consumer's
-        // first pair is an initial load of the live table and every
+        // first delta is an initial load of the live table and every
         // later range is (from ≥ 0, to], so gen-0 images are dead
         // weight (at 100 TB, a full-table copy). The epoch latch still
         // mints so later merges keep the feed current. A base build at
@@ -2168,14 +2168,16 @@ final class PipelineRunner(
       s"${params.externalLocation}/gold_stream/$entity"
     else s"$storageRoot/gold_stream/$entity"
 
-  private val FeedDirRe = "v(-?\\d+)_(\\d+)".r
+  /** The replay-gate identity of the triggered runs' sink calls: fixed,
+    * so a pinned replay skips at the gate while a live stream's fresh
+    * checkpoint fails it until [[takeoverStreamMart]]. */
+  private val BridgeQueryId = Some("triggered-bridge")
 
-  /** A feed's `_consumed` marker. Fail-loud parse (the GenStore.readGen
-    * discipline): consumed pairs are VACUUMED, so a corrupt marker
-    * silently mapped to None would leave no pairs either and re-mint a
-    * v-1 initial-load pair — for an aggregate mart that appends the
-    * whole live version as fresh +1 partials on top of the existing
-    * totals (silent doubling). */
+  /** A feed's `_consumed` marker — its only high-water mark. Fail-loud
+    * parse (the GenStore.readGen discipline): a corrupt marker silently
+    * mapped to None would re-run the initial load — for an aggregate
+    * mart that appends the whole live version as fresh +1 partials on
+    * top of the existing totals (silent doubling). */
   private def feedMarker(fs: org.apache.hadoop.fs.FileSystem,
       feedDir: String): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(feedDir, "_consumed")
@@ -2183,187 +2185,113 @@ final class PipelineRunner(
       txt.toLongOption.getOrElse(throw new IllegalStateException(
         s"streaming-cadence feed marker $p is unreadable " +
           s"('$txt') - refusing to guess the consumed version (a " +
-          "reset would re-mint an initial-load pair over a live " +
-          "sink); restore the marker or rebuild the stream state")))
+          "reset would re-run the initial load over a live sink); " +
+          "restore the marker or rebuild the stream state")))
   }
 
-  /** A feed's committed version pairs `v<from>_<to>`, keyed by `to`. */
-  private def feedPairs(fs: org.apache.hadoop.fs.FileSystem,
-      feedDir: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val d = new org.apache.hadoop.fs.Path(feedDir)
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).filter(_.isDirectory)
-      .flatMap(st => st.getPath.getName match {
-        case FeedDirRe(_, to) => to.toLongOption.map(_ -> st.getPath)
-        case _                => None
-      }).toSeq
+  /** A feed's `_pin` that `_consumed` does not cover yet — the range a
+    * crashed run was applying. Fail-loud parse, like the marker. */
+  private def pendingPin(fs: org.apache.hadoop.fs.FileSystem,
+      feedDir: String): Option[FeedPin] = {
+    val p = new org.apache.hadoop.fs.Path(feedDir, "_pin")
+    StoreMarkers.readText(fs, p).map { txt =>
+      (txt.split(' ') match {
+        case Array("-", t) => t.toLongOption.map(FeedPin(None, _))
+        case Array(f, t) =>
+          for (fv <- f.toLongOption; tv <- t.toLongOption)
+            yield FeedPin(Some(fv), tv)
+        case _ => None
+      }).getOrElse(throw new IllegalStateException(
+        s"streaming-cadence feed pin $p is unreadable ('$txt') - " +
+          "refusing to guess the pinned range; restore the pin or " +
+          "rebuild the stream state"))
+    }.filter(pin => feedMarker(fs, feedDir).forall(_ < pin.to))
   }
 
-  /** Run one AvailableNow pass of a stream-mart sink to completion. */
-  private def runAvailableNow(
-      w: org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row]): Unit = {
-    val q = w.trigger(
-      org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-  }
-
-  /** Maintain one input entity's CDC feed of a streaming-cadence mart
-    * and stream it into the sink. The feed is a directory of IMMUTABLE
-    * version-pair deltas (`v<from>_<to>`, committed by tmp-dir rename —
-    * a crash-replay of the same pair lands at the same name and an
-    * existing pair is never rewritten, so a delta can never overlap an
-    * already-ingested one), consumed by a REAL file stream with a
-    * persistent checkpoint (`v*` glob — the file-source offset log
-    * makes re-draining an already-consumed pair a no-op).
-    *
-    * Ordering per run: DRAIN any pair a crashed run left unconsumed,
-    * extend the feed by one pair up to the live silver version, drain
-    * again. At most one unconsumed pair can therefore exist at a time,
-    * so no micro-batch can merge two deltas carrying the same key —
-    * the sinks' one-row-per-key-per-batch contract holds by
-    * construction (the drain-first step is what keeps it across a
-    * crash between the pair write and its stream run). The `_consumed`
-    * marker (atomic replace) only gates the drain; the next pair's
-    * `from` is max(marker, newest pair on disk), so a stale-low marker
-    * after a crash re-drains idempotently and can never mint an
-    * overlapping delta. Consumed pairs VACUUM at the end of each pass
-    * (the marker carries the high water, the checkpoint owns replay,
-    * and pair names are monotone so a deleted name never recurs) — the
-    * feed holds at most the one in-flight pair, not run history. */
-  private def maintainFeed(feedDir: String, checkpointDir: String,
+  /** Maintain one input entity's feed of a stream-store mart: call the
+    * sink's batch body directly on the delta from the `_consumed` marker
+    * to the live clock, at batch id `to << 16` (+ slice) under
+    * [[BridgeQueryId]]. Exactly-once needs a replayable source and
+    * idempotent sinks: the inputs are immutable (published versions, or
+    * CDF batches above `_consumed`, which [[vacuumCdf]] keeps) and the
+    * sinks' replay gates skip committed ids. The `_pin` ties an id to
+    * its content: the delta's `(from, to)` is written atomically before
+    * the first sink call and `_consumed` advances only after the sink
+    * committed, so a crashed run's range replays exactly, at the same
+    * ids — an aggregate mart's orphan partials (appended before
+    * `_last_batch`) are re-appended as bit-identical copies the read
+    * side drops, never overlapped by a wider delta that would count
+    * them twice. Initial-load pins never replay ([[buildGoldStreamMart]]
+    * rebuilds). THROTTLE (`maxFilesPerTrigger = n`): an initial load
+    * splits into ceil(input files / n) PK-hash slices, each key-unique
+    * (the sinks' one-row-per-key-per-batch contract). `sinkMarker` is
+    * the sink's store marker: the proof of consumption when `_consumed`
+    * is missing. */
+  private def maintainFeed(feedDir: String, pk: Seq[String],
       delta: (Option[Long], Long) => Option[DataFrame], liveVersion: Long,
-      runSink: DataFrame => Unit): Unit = {
+      sinkMarker: org.apache.hadoop.fs.Path,
+      sink: (DataFrame, Long) => Unit): Unit = {
     import org.apache.hadoop.fs.Path
-    val fs = new Path(feedDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(feedDir).getFileSystem(hconf)
     val consumedP = new Path(feedDir, "_consumed")
-    def marker: Option[Long] = feedMarker(fs, feedDir)
-    // the sink checkpoint's commits log: non-empty means at least one
-    // pair was drained through the sink — the initial-load guard below
-    def sinkHasConsumed: Boolean = {
-      val commits = new Path(checkpointDir, "commits")
-      fs.exists(commits) && fs.listStatus(commits)
-        .exists(_.getPath.getName.toLongOption.nonEmpty)
+    val pinP = new Path(feedDir, "_pin")
+    def label(from: Option[Long], to: Long): String =
+      s"${new Path(feedDir).getName}/v${from.getOrElse(-1L)}_$to"
+    def consume(to: Long): Unit = {
+      StoreMarkers.writeAtomic(fs, consumedP, to.toString)
+      fs.delete(pinP, false)
     }
-    def pairDirs: Seq[(Long, Path)] = feedPairs(fs, feedDir)
-    def dirsMax: Option[Long] = pairDirs.map(_._1).maxOption
-    def drain(): Unit = pairDirs.maxByOption(_._1).foreach {
-      case (hi, newest) =>
-        if (marker.forall(_ < hi)) {
-          // schema from the NEWEST pair: plain directory inference
-          // takes the FIRST file's footer, and 'v-1_*' sorts before
-          // 'v<k>_*', so the initial load's schema would win forever —
-          // a column added by silver schema evolution (S7) would be
-          // silently dropped from every later delta. The at-most-one-
-          // unconsumed-pair invariant means the newest pair IS the one
-          // being drained (older pairs are already in the checkpoint's
-          // seen-files log and are re-read as no-ops).
-          val schema = spark.read.parquet(newest.toString).schema
-          // THROTTLE (the bronze ingest's maxFilesPerTrigger knob,
-          // reused): the first-consumption pair is the WHOLE live
-          // table — without a bound it is one micro-batch shuffling
-          // the full table through the sink. Splitting a pair across
-          // micro-batches is safe BY CONSTRUCTION: every pair is
-          // key-unique (netted CDC / per-PK images), so any file
-          // partition of it preserves the sinks'
-          // one-row-per-key-per-batch contract, upserts and signed
-          // partials compose across sub-batches, and AvailableNow
-          // still drains the whole pair before the marker writes.
-          val reader0 = spark.readStream.schema(schema)
-          val reader = params.maxFilesPerTrigger
-            .fold(reader0)(n => reader0.option("maxFilesPerTrigger", n))
-          val t0 = System.nanoTime()
-          runSink(reader.parquet(s"$feedDir/v*"))
-          log(f"feed drain ${new Path(feedDir).getName}/" +
-            f"${newest.getName}: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-          StoreMarkers.writeAtomic(fs, consumedP, hi.toString)
-        }
+    def applyDelta(from: Option[Long], to: Long, d: DataFrame): Unit = {
+      StoreMarkers.writeAtomic(fs, pinP, s"${from.fold("-")(_.toString)} $to")
+      val slices = if (from.nonEmpty) 1
+        else params.maxFilesPerTrigger.fold(1)(n =>
+          ((d.inputFiles.length + n - 1) / n).max(1).min(1 << 16))
+      val t0 = System.nanoTime()
+      val h = pmod(xxhash64(pk.map(c => col(s"`$c`")): _*), lit(slices))
+      (0 until slices).foreach(i =>
+        sink(if (slices == 1) d else d.filter(h === i), (to << 16) + i))
+      log(f"feed drain ${label(from, to)}: " +
+        f"${(System.nanoTime() - t0) / 1e9}%.2fs")
+      consume(to)
     }
-    drain()
-    val from = (dirsMax.toSeq ++ marker.toSeq).maxOption
-    // a v-1 initial-load pair is only mintable on a virgin feed: if the
-    // sink's checkpoint already consumed pairs while marker AND dirs say
-    // "never consumed", the consumed state was lost (deleted marker
-    // after vacuum) — re-minting would replay the whole live version
-    // into live totals. Require an explicit rebuild instead.
-    require(from.nonEmpty || !sinkHasConsumed,
-      s"streaming-cadence feed at $feedDir has no _consumed marker and " +
-        s"no pairs on disk, but the sink checkpoint $checkpointDir has " +
-        "committed batches - the feed's consumed state was lost and a " +
-        "fresh initial-load pair would re-append the whole live " +
-        "version over the existing mart state (silent doubling for " +
-        "aggregate marts). Restore the marker, or clear the mart's " +
-        "stream state (store + checkpoints + feeds) to rebuild")
-    if (from.forall(_ < liveVersion)) {
-      val pairDir = new Path(feedDir,
-        s"v${from.getOrElse(-1L)}_$liveVersion")
-      if (!fs.exists(pairDir)) {
-        val tmp = new Path(feedDir, s".${pairDir.getName}.tmp")
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-        // size-scaled file fan-out (the writeSizeScaled posture): AQE
-        // sizes the rebalanced write to the pair's actual bytes, so a
-        // table-sized initial load lands as MANY files the throttle
-        // above can split, while a dashboard-grain delta still
-        // coalesces to one
-        val t0 = System.nanoTime()
-        // An EMPTY delta (a republish that changed nothing) advances
-        // the consumed marker directly instead of paying a full
-        // stream-drain pass on a no-op pair: draining zero rows
-        // through the sink is a store no-op by definition, and the
-        // marker advance is exactly what draining it would record.
-        // Never taken for the initial-load pair (from=None): a virgin
-        // feed keeps its byte-identical first-consumption path.
-        // The extract PROBES emptiness first (None = provably empty:
-        // the version diff materialized empty, or no CDF batch dir in
-        // range — a pure metadata check), skipping the image joins,
-        // the rebalance, and the 0-row pair write outright; the
-        // rows==0 observe branch below stays as the backstop for any
-        // delta whose emptiness only shows at write time.
-        delta(from, liveVersion) match {
-          case None =>
-            require(from.nonEmpty, s"feed extract at $feedDir " +
-              "reported a provably-empty INITIAL load - a virgin feed " +
-              "must always mint its first pair")
-            StoreMarkers.writeAtomic(fs, consumedP, liveVersion.toString)
-            log(f"feed extract ${new Path(feedDir).getName}/" +
-              f"${pairDir.getName}: empty delta (probe, " +
-              f"${(System.nanoTime() - t0) / 1e9}%.2fs) - marker " +
-              s"advanced to $liveVersion, pair write + drain skipped")
-          case Some(d) =>
-            // row count observed ON the write action (zero extra passes)
-            val obs = new org.apache.spark.sql.Observation()
-            d.observe(obs, count(lit(1)).as("_rows"))
-              .hint("rebalance").write.mode("overwrite")
-              .parquet(tmp.toString)
-            val rows = obs.get("_rows").asInstanceOf[Long]
-            if (rows == 0L && from.nonEmpty) {
-              fs.delete(tmp, true)
-              StoreMarkers.writeAtomic(fs, consumedP,
-                liveVersion.toString)
-              log(f"feed extract ${new Path(feedDir).getName}/" +
-                f"${pairDir.getName}: empty delta " +
-                f"(${(System.nanoTime() - t0) / 1e9}%.2fs) - marker " +
-                s"advanced to $liveVersion, stream drain skipped")
-            } else {
-              require(fs.rename(tmp, pairDir),
-                s"streaming-cadence feed: committing $pairDir failed")
-              log(f"feed extract ${new Path(feedDir).getName}/" +
-                f"${pairDir.getName}: " +
-                f"${(System.nanoTime() - t0) / 1e9}%.2fs")
-            }
-        }
+    pendingPin(fs, feedDir).foreach { pin =>
+      require(pin.from.nonEmpty && pin.from == feedMarker(fs, feedDir),
+        s"feed pin ${label(pin.from, pin.to)} does not start at the " +
+          "_consumed marker - clear the mart's stream state to rebuild")
+      log(s"feed ${label(pin.from, pin.to)}: replaying a crashed run's pin")
+      delta(pin.from, pin.to) match {
+        case Some(d) => applyDelta(pin.from, pin.to, d)
+        case None    => consume(pin.to)
       }
     }
-    drain()
-    // vacuum consumed pairs: the `_consumed` marker carries the high
-    // water for the next `from`, the file-source checkpoint owns
-    // replay (a logged file is never re-requested), and version pairs
-    // are monotone so a deleted name can never recur as new data —
-    // without this the feed grows with O(total run history)
-    marker.foreach { m =>
-      pairDirs.filter(_._1 <= m).foreach { case (_, p) =>
-        fs.delete(p, true) }
+    val from = feedMarker(fs, feedDir)
+    // an initial load over a sink that committed batches would replay
+    // the whole live version into live totals: require a rebuild
+    require(from.nonEmpty || !fs.exists(sinkMarker),
+      s"streaming-cadence feed at $feedDir has no _consumed marker, " +
+        s"but the sink's store marker $sinkMarker shows committed " +
+        "batches - the feed's consumed state was lost and an initial " +
+        "load would re-append the whole live version over the " +
+        "existing mart state (silent doubling for aggregate marts). " +
+        "Restore the marker, or clear the mart's stream state to rebuild")
+    if (from.forall(_ < liveVersion)) {
+      val t0 = System.nanoTime()
+      // None = PROVABLY EMPTY delta (a republish that changed nothing):
+      // advance the marker directly, skipping the no-op sink call
+      delta(from, liveVersion) match {
+        case None =>
+          require(from.nonEmpty, s"feed extract at $feedDir reported a " +
+            "provably-empty INITIAL load - a virgin feed must always " +
+            "apply its first delta")
+          StoreMarkers.writeAtomic(fs, consumedP, liveVersion.toString)
+          log(f"feed extract ${label(from, liveVersion)}: empty delta " +
+            f"(probe, ${(System.nanoTime() - t0) / 1e9}%.2fs) - marker " +
+            s"advanced to $liveVersion, drain skipped")
+        case Some(d) =>
+          log(f"feed extract ${label(from, liveVersion)}: " +
+            f"${(System.nanoTime() - t0) / 1e9}%.2fs")
+          applyDelta(from, liveVersion, d)
+      }
     }
   }
 
@@ -2415,8 +2343,9 @@ final class PipelineRunner(
     * call only at a QUIESCED handoff — the previous driver drained its
     * input and stopped, and the new stream's source starts strictly
     * after the old one's consumed position (for the config bridge this
-    * holds by construction: each triggered run drains AvailableNow and
-    * vacuums consumed pairs, so the feed is empty after a run). Running
+    * holds by construction: each triggered run applies its deltas up to
+    * the live clock and advances `_consumed`, so nothing is pending
+    * after a run). Running
     * two drivers concurrently, or a source that replays already-applied
     * changes, double-applies them — the same contract as any offset
     * handoff. Taking BACK to the config bridge needs no migration while
@@ -2447,44 +2376,39 @@ final class PipelineRunner(
   /** STREAM-STORE mart (`gold.cadence: "streaming"`, or a join or
     * aggregate mart in `gold.mode: "incremental"` — one engine, two
     * spellings, [[GoldConfig.streamMart]]): the mart state lives in the
-    * stream-store layout and is maintained by the SAME `foreachBatch`
-    * sinks a live micro-batch stream would drive —
-    * [[GoldAggOps.goldAggSink]] for `gold.aggregate` (signed deltas,
-    * additive IVM) and [[GoldJoinOps.dimSink]]/[[GoldJoinOps.factSink]]
+    * stream-store layout and is maintained by the batch bodies of the
+    * SAME `foreachBatch` sinks a live stream drives —
+    * [[GoldAggOps.aggBatch]] for `gold.aggregate` (signed deltas,
+    * additive IVM), [[GoldJoinOps.dimBatch]]/[[GoldJoinOps.factBatch]]
     * for `gold.join` (full-row CDC images, keyed upsert stores). Each
-    * triggered run bridges the medallion into those sinks: the
-    * per-input delta ([[signedChangeFeed]]/[[changeFeed]] between
-    * published versions for FULL-mode silver, the merge-time CDF
-    * images ([[cdfDeltaFrame]]) for INCREMENTAL/bucketed silver — so
-    * the 100 TB silver write path and the streaming marts compose; the
-    * whole live state as inserts on first
-    * consumption) rides a REAL file stream with a persistent
-    * checkpoint through the sink, then the publish reads the live mart
-    * back ([[GoldAggOps.readMart]] / [[GoldJoinOps.readMart]]) through
-    * the shared gold gate. Because the store, checkpoints, and replay
-    * markers are exactly the streaming deployment's, an actual stream
-    * can later take over the same store through ONE explicit marker
-    * migration ([[takeoverStreamMart]] — the replay gates otherwise
-    * fail loud on a fresh checkpoint's restarted batch ids, by
-    * design); the config knob only changes WHO drives the sinks
-    * (spec-pinned equivalence: the mart equals the batch
-    * star/aggregate over the final silver state, and a live
-    * `foreachBatch` stream continues a config-built store to the same
-    * oracle — StreamingSpec).
+    * triggered run calls them directly ([[maintainFeed]], no streaming
+    * query) on the per-input delta: [[signedChangeFeed]]/[[changeFeed]]
+    * between published versions for FULL-mode silver, the merge-time
+    * CDF images ([[cdfDeltaFrame]]) for INCREMENTAL/bucketed silver (so
+    * the 100 TB silver write path and the streaming marts compose), the
+    * whole live state as inserts on first consumption. The publish then
+    * reads the live mart back ([[GoldAggOps.readMart]] /
+    * [[GoldJoinOps.readMart]]) through the shared gold gate. Because the
+    * store and replay markers are the streaming deployment's, an actual
+    * stream can take over the same store through ONE explicit marker
+    * migration ([[takeoverStreamMart]] — the replay gates otherwise fail
+    * loud on a fresh checkpoint's restarted batch ids, by design);
+    * spec-pinned equivalence: the mart equals the batch star/aggregate
+    * over the final silver state, and a live `foreachBatch` stream
+    * continues a config-built store to the same oracle (StreamingSpec).
     *
     * Scale shape per run: O(changed rows) delta extraction (the
-    * signature-compressed snapshot diff), one micro-batch per input
-    * through the sinks (fact batches broadcast-join batch-restricted
-    * dim slices; dim batches re-derive O(affected facts) via the
-    * two-phase restrict), and a keep-latest/re-sum read over stores
-    * bounded by compaction. Dims feed BEFORE facts so first-run facts
-    * derive against complete dim state. Preconditions fail loud, before
-    * any feed or store write: star-only equi joins, and each flat dim
-    * unique on its join keys (a 1:N fan-out cannot ride the fact-PK-keyed
-    * row store). Incremental inputs additionally carry a CDF epoch so an
-    * upstream full refresh rebuilds the mart loud instead of replaying a
-    * restarted clock; a full-mode input whose consumed version was
-    * vacuumed rebuilds the mart loud from the live versions. */
+    * signature-compressed snapshot diff), one sink batch per input
+    * (fact batches broadcast-join batch-restricted dim slices; dim
+    * batches re-derive O(affected facts) via the two-phase restrict),
+    * and a keep-latest/re-sum read over stores bounded by compaction.
+    * Dims feed BEFORE facts so first-run facts derive against complete
+    * dim state. Preconditions fail loud, before any feed or store
+    * write: star-only equi joins, and each flat dim unique on its join
+    * keys (a 1:N fan-out cannot ride the fact-PK-keyed row store). An
+    * upstream full refresh of an incremental input (new CDF epoch), a
+    * vacuumed consumed or pinned full-mode version, and an interrupted
+    * initial load all rebuild the mart loud from the live versions. */
   def buildGoldStreamMart(entity: String, cfg: EntityConfig,
       g: GoldConfig,
       obs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
@@ -2545,12 +2469,14 @@ final class PipelineRunner(
     // the OLD projection — the consumed versions match the live ones,
     // so nothing re-derives and the mart silently publishes the old
     // (or a mixed) shape while its table props claim the new config.
-    // On mismatch the whole stream state (stores, feeds, checkpoints)
-    // clears and rebuilds from the live versions — derived state,
-    // logged loud, self-healing (the batch full path is immune: it
-    // rebuilds per run).
+    // On mismatch the whole stream state (stores and feeds) clears and
+    // rebuilds from the live versions — derived state, logged loud,
+    // self-healing (the batch full path is immune: it rebuilds per
+    // run). The layout tag: a mart built by the file-stream bridge has
+    // checkpoint batch ids and identities in its markers, so it rebuilds
+    // once, and its `feed_*` pairs and `cp_*` checkpoints go with it.
     val derivFp = {
-      val shape = (cfg.uniquePrimaryKey, g.select,
+      val shape = ("direct-sink", cfg.uniquePrimaryKey, g.select,
         g.join.map(j => (j.entity, j.on, j.joinType, j.layer,
           j.temporal.map(t => (t.factTs, t.dimTs, t.tieBreak, t.attrs)))),
         g.aggregate.map(a =>
@@ -2568,8 +2494,8 @@ final class PipelineRunner(
     StoreMarkers.readText(fsS, fpP).foreach { old =>
       if (old != derivFp) {
         log(s"gold.$entity: the streaming mart's derivation config " +
-          "changed (select/join/aggregate/pk) - clearing the stream " +
-          s"state at $dir and rebuilding from the live versions")
+          "changed (select/join/aggregate/pk/layout) - clearing the " +
+          s"stream state at $dir and rebuilding from the live versions")
         fsS.delete(dirP, true)
       }
     }
@@ -2609,9 +2535,19 @@ final class PipelineRunner(
         s"stream state at $dir and rebuilding from the live versions")
       fsS.delete(dirP, true)
     }
-    // VACUUMED consumed version: a full-mode input's next feed pair
-    // diffs from the version the feed last reached; once the retention
-    // window reclaimed it no delta exists, so rebuild loud from the
+    // INTERRUPTED initial load: a pin with no `from` is never replayed
+    // (bucketed silver's initial load reads the live table, which moves)
+    if (fsS.exists(dirP) && (entity +: g.join.map(_.entity)).exists(e =>
+        pendingPin(fsS, s"$dir/feed_$e").exists(_.from.isEmpty))) {
+      log(s"gold.$entity: a streaming-mart initial load was interrupted " +
+        s"- clearing the stream state at $dir and rebuilding from the " +
+        "live versions")
+      fsS.delete(dirP, true)
+    }
+    // VACUUMED consumed or pinned version: a full-mode input's next
+    // delta diffs from the version the feed last reached, and a pinned
+    // range replays between its two versions; once the retention window
+    // reclaimed one of them no delta exists, so rebuild loud from the
     // live versions (the fingerprint posture) instead of failing in
     // readVersion — correct, just not incremental this run.
     if (fsS.exists(dirP)) {
@@ -2619,9 +2555,11 @@ final class PipelineRunner(
         .distinct.filterNot { case (e, l) => isBucketed(e, l) }
         .flatMap { case (e, l) =>
           val feedDir = s"$dir/feed_$e"
-          (feedPairs(fsS, feedDir).map(_._1) ++ feedMarker(fsS, feedDir))
-            .maxOption.filter(v => v < liveVersion(e, l) &&
-              !tableVersions(e, l).exists(_.version == v))
+          val live = liveVersion(e, l)
+          val kept = tableVersions(e, l).map(_.version).toSet
+          (feedMarker(fsS, feedDir).toSeq ++ pendingPin(fsS, feedDir)
+              .toSeq.flatMap(p => p.from.toSeq :+ p.to))
+            .distinct.filter(v => v < live && !kept.contains(v))
             .map(v => s"$l/$e v$v")
         }
       if (lost.nonEmpty) {
@@ -2643,7 +2581,7 @@ final class PipelineRunner(
     if (!fsS.exists(epP))
       StoreMarkers.writeAtomic(fsS, epP, epochsTxt)
     // None = PROVABLY EMPTY delta (maintainFeed advances the marker and
-    // skips the pair write + drain): for a bucketed input that is a pure
+    // skips the sink call): for a bucketed input that is a pure
     // fs-metadata probe (no committed CDF dir in range — empty diffs
     // never commit one); for a full-mode input the signature diff
     // materializes once (localCheckpoint) and, when non-empty, the SAME
@@ -2675,14 +2613,13 @@ final class PipelineRunner(
       }
     val mart = g.aggregate match {
       case Some(a) =>
-        maintainFeed(s"$dir/feed_$entity", s"$dir/cp_$entity",
+        maintainFeed(s"$dir/feed_$entity", cfg.uniquePrimaryKey,
           deltaFrame(entity, cfg.uniquePrimaryKey, signed = true),
-          liveVersion(entity),
-          stream => runAvailableNow(
-            GoldAggOps.goldAggSink(stream, a, storeDir,
-              s"$dir/cp_$entity", signCol = Some("_cdc_sign"),
-              compactAfter = g.compactAfter,
-              compactBackstop = g.compactBackstop)))
+          liveVersion(entity), GoldAggOps.lastBatchMarker(storeDir),
+          (batch, id) => GoldAggOps.aggBatch(batch, id, BridgeQueryId, a,
+            storeDir, signCol = Some("_cdc_sign"),
+            compactAfter = g.compactAfter,
+            compactBackstop = g.compactBackstop))
         GoldAggOps.readMart(spark, storeDir, a)
       case None =>
         val star = joinStar.get
@@ -2693,7 +2630,7 @@ final class PipelineRunner(
             // (required unique there), the change id for temporal history
             val pk = j.temporal.map(t => Seq(t.tieBreak))
               .getOrElse(d.keys.map(_._2))
-            maintainFeed(s"$dir/feed_${j.entity}", s"$dir/cp_${j.entity}",
+            maintainFeed(s"$dir/feed_${j.entity}", pk,
               (from, to) => deltaFrame(j.entity, pk, signed = false,
                   j.layer)(from, to).map { raw =>
                 if (j.temporal.nonEmpty) {
@@ -2708,28 +2645,26 @@ final class PipelineRunner(
                 } else raw
               },
               liveVersion(j.entity, j.layer),
-              stream => runAvailableNow(
-                GoldJoinOps.dimSink(stream, j.entity, star, storeDir,
-                  s"$dir/cp_${j.entity}", compactAfter = g.compactAfter)))
+              GoldJoinOps.dimMarker(storeDir, d.name),
+              (batch, id) => GoldJoinOps.dimBatch(batch, id, BridgeQueryId,
+                d, star, storeDir, g.compactAfter))
         }
         val factFeed: () => Unit = () =>
-          maintainFeed(s"$dir/feed_$entity", s"$dir/cp_$entity",
+          maintainFeed(s"$dir/feed_$entity", cfg.uniquePrimaryKey,
             deltaFrame(entity, cfg.uniquePrimaryKey, signed = false),
-            liveVersion(entity),
-            stream => runAvailableNow(
-              GoldJoinOps.factSink(stream, star, storeDir,
-                s"$dir/cp_$entity", compactAfter = g.compactAfter)))
-        // OVERLAP the independent feed drains (opt guide §2.6 — the
-        // engine's resolved-graph concurrency applied INSIDE one mart):
-        // the fact and dim feeds are separate streams into disjoint
-        // substores whose micro-batches the per-store lock + seq/marker
-        // discipline already serializes, and any batch interleaving
-        // converges to the same mart state (factSink derives against
-        // the dims current at its batch; dimSink re-derives the
-        // affected facts). Engages only once every dim store exists:
-        // on a VIRGIN mart the fact drain must not race a left-join
-        // dim's first batch (derive fails loud there by design), so
-        // the first pass keeps the dims-then-fact order.
+            liveVersion(entity), GoldJoinOps.factMarker(storeDir),
+            (batch, id) => GoldJoinOps.factBatch(batch, id, BridgeQueryId,
+              star, storeDir, g.compactAfter))
+        // OVERLAP the independent feeds (opt guide §2.6 — the engine's
+        // resolved-graph concurrency applied INSIDE one mart): the fact
+        // and dim feeds write disjoint substores whose batches the
+        // per-store lock + seq/marker discipline already serializes, and
+        // any batch interleaving converges to the same mart state
+        // (factBatch derives against the dims current at its batch;
+        // dimBatch re-derives the affected facts). Engages only once
+        // every dim store exists: on a VIRGIN mart the fact feed must not
+        // race a left-join dim's first batch (derive fails loud there by
+        // design), so the first pass keeps the dims-then-fact order.
         val feeds = dimFeeds :+ factFeed
         if (feeds.size > 1 &&
             GoldJoinOps.dimStoresReady(spark, storeDir, star)) {
@@ -2743,7 +2678,7 @@ final class PipelineRunner(
               .foreach(Await.result(_, Duration.Inf))
           } finally {
             // mirror runLocked's eachOf: never let a failed feed leave
-            // a sibling streaming into its checkpoint past this scope
+            // a sibling writing into the store past this scope
             pool.shutdownNow()
             pool.awaitTermination(Long.MaxValue,
               java.util.concurrent.TimeUnit.NANOSECONDS)
@@ -3574,6 +3509,10 @@ object PipelineRunner {
     * mart run. */
   private[pipeline] val dimUniqueValidated =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** The delta range a stream-mart feed is applying (its `_pin`):
+    * `from` None = an initial load. */
+  private[pipeline] final case class FeedPin(from: Option[Long], to: Long)
 
   /** Bootstrap exactly like the reference's conf-driven entry
     * (`00_config_loader.py`): params from spark.conf, config JSON from the

@@ -435,15 +435,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.table(p2.goldFqn("receipts"))
         .as[(String, Long, Long)].collect().toSet == aggTwin,
       "streaming aggregate mart diverged from the batch twin")
-    // the stream state persisted and advanced across runs: consumed
-    // feed pairs VACUUM (the _consumed marker carries the high water),
-    // live replay markers in the store
+    // the stream state persisted and advanced across runs: no feed
+    // pair or stream checkpoint anywhere under gold_stream/ (the sinks
+    // are called on the deltas directly; the _consumed marker carries
+    // the high water), live replay markers in the store
     val salesFeed = new java.io.File(
       s"$store/gold_stream/sales/feed_sales")
-    val pairs = salesFeed.listFiles().filter(_.isDirectory)
-      .map(_.getName).toSet
-    assert(pairs.isEmpty,
-      s"consumed feed pairs were not vacuumed: $pairs")
+    import scala.jdk.CollectionConverters._
+    val streamDirs = Files.walk(Path.of(s"$store/gold_stream"))
+      .iterator().asScala.filter(Files.isDirectory(_))
+      .map(_.getFileName.toString)
+      .filter(n => n.matches("v-?\\d+_\\d+") || n.startsWith("cp_")).toSet
+    assert(streamDirs.isEmpty,
+      s"feed pairs or stream checkpoints under gold_stream/: $streamDirs")
     assert(new java.io.File(s"$salesFeed/_consumed").isFile,
       "feed high-water marker missing after vacuum")
     assert(new java.io.File(
@@ -922,8 +926,8 @@ class PipelineSpec extends AnyFunSuite {
         .run(ConfigLoader.load(spark, src))
       params
     }
-    // shrink the AQE coalesce floor so the rebalanced pair write fans
-    // out at test scale the way a table-sized pair would at 100 TB
+    // shrink the AQE coalesce floor so the silver write fans out into
+    // several files at test scale the way a table-sized one would
     val conf = spark.conf
     val advK = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     val minK = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
@@ -939,15 +943,18 @@ class PipelineSpec extends AnyFunSuite {
         .as[(Long, Double, String)].collect().toSet == twin &&
       twin.size == 400,
       "throttled streaming mart diverged from the batch star")
-    // the pair really fanned out and the drain really split: >1 commit
-    // in the fact feed's checkpoint = >1 micro-batch for one pair
-    val commits = new java.io.File(
-      s"$store/gold_stream/sales/cp_sales/commits")
-      .listFiles().map(_.getName).filter(_.forall(_.isDigit))
-    assert(commits.length > 1,
-      s"expected a split drain (several micro-batches), got " +
-        s"${commits.length} commit(s) - the pair write did not fan " +
-        "out or the throttle was ignored")
+    // the initial load really split: every fact sink batch mints its
+    // own seq, so >1 distinct _sj_seq in the fact store = >1 sink batch
+    // for one delta
+    val facts = s"$store/gold_stream/sales/store/facts"
+    val gen = Some(Path.of(s"$facts/_gen")).filter(Files.isRegularFile(_))
+      .map(Files.readString(_).trim).getOrElse("0")
+    val batches = spark.read.parquet(s"$facts/g$gen")
+      .select("_sj_seq").distinct().count()
+    assert(batches > 1,
+      s"expected a split drain (several sink batches), got " +
+        s"$batches batch(es) - the silver input did not fan out or " +
+        "the throttle was ignored")
   }
 
   test("gold.cadence streaming: a corrupt feed _consumed marker fails " +
@@ -993,10 +1000,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(causes(e1).exists(c => Option(c.getMessage)
         .exists(_.contains("refusing to guess the consumed version"))),
       s"expected the unreadable-marker guard, got: $e1")
-    // delete the marker outright: pairs are vacuumed, so the feed looks
-    // virgin - but the sink checkpoint has committed batches, and a
-    // fresh v-1 initial-load pair would re-append the whole live
-    // version as +1 partials over the live totals
+    // delete the marker outright: the feed looks virgin - but the
+    // sink's store marker shows committed batches, and a fresh initial
+    // load would re-append the whole live version as +1 partials over
+    // the live totals
     fs.delete(consumedP, false)
     Seq((5L, 6.0, "a")).toDF("r_id", "amount", "grp")
       .write.mode("append").parquet(s"$src/receipts")
@@ -1008,6 +1015,100 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.table(p1.goldFqn("receipts")).orderBy($"grp")
         .as[(String, Long, Long)].collect().toSeq == before,
       "a refused run mutated the mart")
+  }
+
+  test("gold.cadence streaming: a crash inside a feed's sink call " +
+      "replays exactly the pinned range at the same batch ids - orphan " +
+      "aggregate partials are not counted twice, a committed batch " +
+      "skips at the gate, and an interrupted initial load rebuilds") {
+    import spark.implicits._
+    val src = tmpDir("gcp-src"); val store = tmpDir("gcp-store")
+    Files.writeString(Path.of(src, "dp_config_template.json"),
+      """{"receipts": {
+        |  "raw_file_format": "parquet",
+        |  "unique_primary_key": ["r_id"],
+        |  "gold": {"cadence": "streaming",
+        |    "aggregate": {"group_by": ["grp"],
+        |      "aggs": [{"op": "count", "as": "n"},
+        |               {"op": "sum_x1e6", "expr": "amount",
+        |                "as": "total_x1e6"}]}}
+        |}}""".stripMargin)
+    Seq((1L, 1.5, "a"), (2L, 2.5, "a"), (3L, 4.0, "b"))
+      .toDF("r_id", "amount", "grp").write.parquet(s"$src/receipts")
+    var day = 0
+    def run(): PipelineParams = {
+      day += 1
+      val (r, p) = mkRunner(src, store, f"2024-09-$day%02d 00:00:00",
+        catalog = "gcpin")
+      r.run(ConfigLoader.load(spark, src)); p
+    }
+    def land(rows: (Long, Double, String)*): Unit =
+      rows.toDF("r_id", "amount", "grp")
+        .write.mode("append").parquet(s"$src/receipts")
+    def assertTwin(p: PipelineParams, what: String): Unit = {
+      val twin = spark.table(p.silverFqn("receipts"))
+        .groupBy($"grp").agg(count(lit(1)).as("n"),
+          sum(floor($"amount" * lit(1e6))).as("total_x1e6"))
+        .as[(String, Long, Long)].collect().toSet
+      assert(spark.table(p.goldFqn("receipts"))
+          .as[(String, Long, Long)].collect().toSet == twin, what)
+    }
+    // markers go through the Hadoop fs (checksum-consistent)
+    import org.apache.hadoop.fs.{Path => HPath}
+    val feed = s"$store/gold_stream/receipts/feed_receipts"
+    val consumedP = new HPath(feed, "_consumed")
+    val pinP = new HPath(feed, "_pin")
+    val lastP = new HPath(s"$store/gold_stream/receipts/store/_last_batch")
+    val fs = consumedP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def read(p: HPath): String = {
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+    }
+    def write(p: HPath, txt: String): Unit = {
+      val out = fs.create(p, true)
+      try out.write(txt.getBytes("UTF-8")) finally out.close()
+    }
+    run()
+    // crash after run 2's partial append, before its `_last_batch`: both
+    // markers as before run 2, run 2's pin, and its partials in the store
+    land((1L, 2.0, "a"), (4L, 3.0, "b"))
+    val (c1, last1) = (read(consumedP), read(lastP))
+    run()
+    val c2 = read(consumedP)
+    write(consumedP, c1); write(lastP, last1); write(pinP, s"$c1 $c2")
+    land((5L, 6.0, "a"))
+    val p3 = run()
+    assertTwin(p3, "a replayed pinned range counted the orphan partials " +
+      "twice (or a wider delta overlapped them)")
+    assert(!fs.exists(pinP), "the replayed pin was not cleared")
+    // crash after run 3's last sink marker, before `_consumed`: the
+    // replay of the pinned range skips at the gate
+    val c3 = read(consumedP)
+    write(consumedP, c2); write(pinP, s"$c2 $c3")
+    land((2L, 0.5, "c"), (6L, 1.0, "c"))
+    val p4 = run()
+    assertTwin(p4, "a committed pinned batch was applied again")
+    assert(read(consumedP).toLong > c3.toLong,
+      "the feed did not extend past the replayed range")
+    val parts = s"$store/gold_stream/receipts/store/agg_partials"
+    val gen = Some(Path.of(s"$parts/_gen")).filter(Files.isRegularFile(_))
+      .map(Files.readString(_).trim).getOrElse("0")
+    assert(spark.read.parquet(s"$parts/g$gen")
+        .filter($"_batch_id" === (c3.toLong << 16))
+        .groupBy($"grp").count().filter($"count" > 1L).isEmpty,
+      "the replayed batch passed the gate instead of skipping")
+    // an interrupted initial load: a pin with no `from` and no
+    // `_consumed` rebuilds the mart loud instead of replaying
+    val c4 = read(consumedP)
+    fs.delete(consumedP, false)
+    write(pinP, s"- $c4")
+    land((8L, 4.5, "b"))
+    val err = new java.io.ByteArrayOutputStream()
+    val p5 = Console.withErr(err) { run() }
+    assert(err.toString("UTF-8").contains("initial load was interrupted"),
+      "the interrupted initial load did not rebuild loud")
+    assertTwin(p5, "the rebuilt mart diverged from the batch twin")
+    assert(!fs.exists(pinP), "the rebuild left the stale pin behind")
   }
 
   test("gold.cadence streaming: silver schema evolution flows into the " +
@@ -1041,9 +1142,9 @@ class PipelineSpec extends AnyFunSuite {
     val cols1 = spark.table(p1.goldFqn("sales")).columns.toSet
     assert(cols1.contains("amount") && cols1.contains("s_name") &&
       !cols1.contains("note"), s"initial mart columns wrong: $cols1")
-    // wave 2 ADDS a column (S7 schema evolution): the new delta pair
-    // carries it and the mart must too — the old bug inferred the feed
-    // schema from the initial-load pair and silently dropped it
+    // wave 2 ADDS a column (S7 schema evolution): the new delta
+    // carries it and the mart must too — a feed schema fixed at the
+    // initial load would silently drop it
     Seq((2L, 7.0, 10L, "rush")).toDF("sale_id", "amount", "shop_id", "note")
       .write.mode("append").parquet(s"$src/sales")
     val p2 = run("2024-10-02 00:00:00")

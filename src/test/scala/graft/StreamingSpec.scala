@@ -1346,8 +1346,8 @@ class StreamingSpec extends AnyFunSuite {
     denyQ.stop()
     assert(mart() == Set((1L, 5.0, "North"), (2L, 6.0, "South")),
       "the refused stream mutated the store")
-    // the sanctioned migration (config runs drained AvailableNow and
-    // vacuumed their pairs — the handoff is quiesced by construction)
+    // the sanctioned migration (each config run applied its deltas up
+    // to the live clock — the handoff is quiesced by construction)
     runner.takeoverStreamMart("sales", cfgs("sales"))
     runner.takeoverStreamMart("receipts", cfgs("receipts"))
     // live takeover: dim rename, fact update + delete image + insert
