@@ -159,6 +159,11 @@ final case class EntityConfig(
     expectAll ++ expectAllOrFail
   def anyExpectations: Boolean =
     gateExpectations.nonEmpty || monitorExpectations.nonEmpty
+  /** The primary key under its published silver names (after
+    * `renamed_columns`): the key of the silver table, its merge view and
+    * its change feed. */
+  def silverPrimaryKey: Seq[String] =
+    uniquePrimaryKey.map(p => renamedColumns.getOrElse(p, p))
 }
 
 /** Gold-layer declaration: which curation to run and how to publish it. */
@@ -239,23 +244,10 @@ final case class GoldConfig(
       * compaction they grow with TOTAL historical changes and every
       * publish re-windows dead versions — the silver
       * `silver_compact_after` argument, applied to gold state. */
-    compactAfter: Int = 16,
-    /** `compact_backstop`: file-count multiplier past which a
-      * FULL-REWRITE store ([[graft.pipeline.GenStore.compact]]'s
-      * bytes-doubling gate — the streaming aggregate partials) rewrites
-      * regardless of byte growth. The doubling gate amortizes rewrite
-      * work to O(bytes·log) but lets a big base sit under up to
-      * `compact_backstop × compact_after` byte-light appends
-      * (idle-run empties, tombstone trickles), and every read pays that
-      * listing/footer amplification in the interim — this knob trades
-      * rewrite amortization against read amplification per store grain
-      * (lower = fresher reads, more rewrites of the big base). */
-    compactBackstop: Int = 64
+    compactAfter: Int = 16
 ) {
   require(compactAfter >= 1 && compactAfter <= 65536,
     s"gold.compact_after must be in [1, 2^16], got $compactAfter")
-  require(compactBackstop >= 1 && compactBackstop <= 65536,
-    s"gold.compact_backstop must be in [1, 2^16], got $compactBackstop")
   require(mode != "incremental" || (curation.boilerplateMinDocFreq.isEmpty
       && curation.lineDedupSpan.isEmpty),
     "gold mode 'incremental' cannot run the corpus-global segment-cleanup " +
@@ -848,8 +840,6 @@ object ConfigLoader {
       expectAllOrFail =
         f.get("expect_all_or_fail").map(strMap).getOrElse(Map.empty),
       compactAfter = f.get("compact_after").flatMap(num).map(_.toInt)
-        .getOrElse(GoldConfig().compactAfter),
-      compactBackstop = f.get("compact_backstop").flatMap(num)
-        .map(_.toInt).getOrElse(GoldConfig().compactBackstop))
+        .getOrElse(GoldConfig().compactAfter))
   }
 }

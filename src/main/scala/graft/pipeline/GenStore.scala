@@ -100,6 +100,10 @@ private[pipeline] final class GenStore(fs: FileSystem, root: String,
 
   private val genMarkerP = new Path(root, "_gen")
 
+  /** [[compact]]'s file-count backstop: past this multiple of the file
+    * threshold a full-rewrite store rewrites whatever its bytes did. */
+  private val BackstopMult = 64L
+
   /** Absent marker = generation 0 (new or legacy store). An EXISTING
     * but unreadable marker fails loud: falling back to 0 would point
     * [[dataDir]] at a long-swept `g0` and the store would silently
@@ -176,12 +180,11 @@ private[pipeline] final class GenStore(fs: FileSystem, root: String,
     * at each swap) — the classic size-doubling policy, amortizing total
     * rewrite work to O(total bytes × log). Tiny dashboard-grain stores
     * double trivially (the base is a handful of KB), so their cadence
-    * is unchanged. Backstop: `backstopMult`× the file threshold
-    * (default 64, config `gold.compact_backstop`) forces a rewrite
-    * regardless of bytes, bounding read-side listing amplification when
-    * a big base accumulates byte-light appends (idle-run empties,
-    * tombstone trickles) — the operator's rewrite-amortization vs
-    * read-amplification dial per store grain. A missing `_base_bytes`
+    * is unchanged. Backstop: [[BackstopMult]]× the file threshold
+    * forces a rewrite regardless of bytes, bounding read-side listing
+    * amplification when a big base accumulates byte-light appends
+    * (idle-run empties, tombstone trickles); at threshold 0 any file
+    * forces it (the takeover migration's rewrite). A missing `_base_bytes`
     * (legacy store, or a
     * crash between the gen swap and the marker write) triggers eagerly —
     * the safe direction (an extra rewrite, never a skipped one).
@@ -191,18 +194,16 @@ private[pipeline] final class GenStore(fs: FileSystem, root: String,
     * stale generations drop. `write` owns the physical write
     * (partitioning + parquet) so each store keeps its own layout
     * discipline. */
-  def compact(threshold: Int, label: String, backstopMult: Int = 64)(
+  def compact(threshold: Int, label: String)(
       rewrite: String => DataFrame)(write: (DataFrame, String) => Unit)
       : Unit = {
-    require(backstopMult >= 1,
-      s"compact backstop multiplier must be >= 1, got $backstopMult")
     val files = batchFiles
     if (files > threshold) {
       val base = StoreMarkers.readText(fs, baseBytesP)
         .flatMap(_.toLongOption)
       val bytes = liveBytes
       val due = base.forall(b => bytes >= 2L * b) ||
-        files > backstopMult.toLong * threshold
+        files > BackstopMult * threshold
       if (due) {
         val gen = readGen()
         val nextDir = s"$root/g${gen + 1L}"

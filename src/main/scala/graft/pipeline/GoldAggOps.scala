@@ -195,9 +195,9 @@ object GoldAggOps {
     RunLock.withLock(spark, storeDir) {
       readMarker(fs, markerP).foreach { _ =>
         val store = new GenStore(fs, s"$storeDir/agg_partials", _ => ())
-        // threshold 0 + backstop 1: "files > 1·0" — force the rewrite
-        // regardless of the byte-doubling gate
-        store.compact(0, s"takeover migration of $storeDir", 1) { from =>
+        // threshold 0: any file passes the backstop ("files > 0") —
+        // force the rewrite regardless of the byte-doubling gate
+        store.compact(0, s"takeover migration of $storeDir") { from =>
           sumPartials(spark, from, a, dedupBatches = true)
             .withColumn("_batch_id", lit(-1L))
         } { (df, to) => writeSizeScaled(df, a.groupBy, "overwrite", to) }
@@ -217,13 +217,13 @@ object GoldAggOps {
     * wrapper over [[aggBatch]]. */
   def goldAggSink(stream: DataFrame, a: GoldAggregate, storeDir: String,
       checkpoint: String, signCol: Option[String] = None,
-      compactAfter: Int = 16, compactBackstop: Int = 64)
+      compactAfter: Int = 16)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] = {
     require(compactAfter >= 1 && compactAfter <= 65536,
       s"compactAfter must be in [1, 2^16], got $compactAfter")
     batchSink(stream, checkpoint)(aggBatch(_, _, _, a, storeDir, signCol,
-      compactAfter, compactBackstop))
+      compactAfter))
   }
 
   /** An update-mode `foreachBatch` sink that hands `body` each
@@ -246,7 +246,7 @@ object GoldAggOps {
     * totals replay-safe (the object doc). */
   def aggBatch(batch: DataFrame, batchId: Long, qid: Option[String],
       a: GoldAggregate, storeDir: String, signCol: Option[String],
-      compactAfter: Int, compactBackstop: Int): Unit = {
+      compactAfter: Int): Unit = {
     val spark = batch.sparkSession
     val fs = new Path(storeDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -272,8 +272,7 @@ object GoldAggOps {
           .withColumn("_batch_id", lit(batchId))
         writeSizeScaled(partial, a.groupBy, "append", store.dataDir)
         writeMarker(fs, markerP, batchId, qid)
-        store.compact(compactAfter, s"stream agg store $storeDir",
-          compactBackstop) { from =>
+        store.compact(compactAfter, s"stream agg store $storeDir") { from =>
           sumPartials(spark, from, a, dedupBatches = true)
             .withColumn("_batch_id", lit(batchId))
         } { (df, to) =>
@@ -311,8 +310,7 @@ object GoldAggOps {
     * to O(bytes·log) via the bytes-doubling gate. */
   def sessionMartSink(stream: DataFrame, tsCol: String, gap: String,
       delay: String, keys: Seq[String], aggs: Seq[Column],
-      storeDir: String, checkpoint: String, compactAfter: Int = 16,
-      compactBackstop: Int = 64)
+      storeDir: String, checkpoint: String, compactAfter: Int = 16)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] = {
     val kcols = keys.map(c => col(s"`$c`"))
@@ -343,7 +341,7 @@ object GoldAggOps {
             // so the rewrite must amortize — collapse crash-replay
             // duplicates while folding the small batch files
             store.compact(compactAfter,
-              s"session mart store $storeDir", compactBackstop) { from =>
+              s"session mart store $storeDir") { from =>
               spark.read.parquet(from)
                 .dropDuplicates(keys :+ "sess_start_us")
             } { (df, to) => writeSizeScaled(df, keys, "overwrite", to) }

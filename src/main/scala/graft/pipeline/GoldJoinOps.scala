@@ -145,14 +145,17 @@ object GoldJoinOps {
 
   /** True when every dim substore of this star already has a live data
     * directory — the steady-state signal that the mart's fact and dim
-    * feeds may drain CONCURRENTLY: [[derive]] fails loud for a
+    * feeds may be driven CONCURRENTLY: [[derive]] fails loud for a
     * left-join dim whose store has never seen a batch, so a virgin
     * mart must drain its dim feeds before the fact feed (the
     * sequential first pass); once every dim store exists, any
     * fact/dim micro-batch interleaving converges to the same mart
     * state (factSink derives against the dims current at its batch,
     * dimSink re-derives the affected facts — see the object doc's
-    * replay/lock discipline). */
+    * replay/lock discipline). The batches themselves still serialize on
+    * the store lock, so concurrency buys only the feeds' work outside
+    * it: a full-mode input's version-diff probe, not an
+    * incremental-silver input's drain. */
   def dimStoresReady(spark: SparkSession, storeDir: String,
       star: StreamStar): Boolean = {
     val fs = fsOf(spark, storeDir)

@@ -99,13 +99,7 @@ final class PipelineRunner(
     if (!fs.exists(base)) return Seq.empty
     val fqn = if (layer == "silver") params.silverFqn(entity)
       else params.goldFqn(entity)
-    val liveLocation: Option[String] =
-      if (spark.catalog.tableExists(fqn))
-        Some(spark.sql(s"DESCRIBE TABLE EXTENDED $fqn")
-          .filter(col("col_name") === "Location")
-          .select(col("data_type")).collect().headOption
-          .map(_.getString(0)).getOrElse(""))
-      else None
+    val liveLocation = tableLocation(fqn).map(_.toUri.getPath)
     fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
       .flatMap(p => p.getName.stripPrefix("v").toLongOption
         .filter(_ => p.getName.startsWith("v")).map(v => (v, p)))
@@ -442,11 +436,8 @@ final class PipelineRunner(
 
   // ---- phase 2: silver (batch, full recompute) ----------------------------
 
-  /** The silver materialized table (reference `02_silver_processing.py:
-    * 115-150`): batch read of bronze → PK dedup (latest `_ingested_at`
-    * wins) → optional CDC-delete filter → expectations gate → rename →
-    * cluster layout → overwrite. */
-  /** The silver frame: dedup → CDC filter → cluster layout →
+  /** The silver frame (reference `02_silver_processing.py:115-150`):
+    * dedup → CDC filter → cluster layout →
     * expectations gate (+ metrics) → rename. When `obs` is given,
     * expectation violation counts bind to it (read after the write
     * action).
@@ -478,24 +469,18 @@ final class PipelineRunner(
   private def silverTransform(source: DataFrame, cfg: EntityConfig,
       obs: Option[org.apache.spark.sql.Observation],
       obsName: String,
-      /** When set, the frame carries this PK-hash bucket column and the
-        * physical layout is one hash exchange on it + a within-partition
-        * sort by (bucket, cluster cols) — exactly the sort the dynamic
-        * partitioned write needs, so no second exchange and bounded open
-        * writers per task. Replaces the global range/z-order layout, whose
-        * cross-bucket file ordering the bucketed publish cannot keep. */
-      bucketCol: Option[String] = None): DataFrame = {
+      /** When set, the frame carries the PK-hash bucket column
+        * ([[PipelineRunner.BucketCol]]) and is laid out by
+        * [[bucketLayout]] in place of the global range/z-order layout,
+        * whose cross-bucket file ordering the bucketed publish cannot
+        * keep. */
+      bucketed: Boolean = false): DataFrame = {
     val afterCdc = silverPreGate(source, cfg)
     val newToOld = cfg.renamedColumns.map(_.swap)
     val clusterCols = cfg.clusteringCols.map(c => newToOld.getOrElse(c, c))
-    val laid = bucketCol match {
-      case Some(bc) =>
-        val cols = clusterCols.filter(afterCdc.columns.contains)
-        afterCdc.repartition(col(bc))
-          .sortWithinPartitions((bc +: cols).map(col): _*)
-      case None => ClusterLayout(afterCdc, clusterCols,
-        boundsFrom = Some(source))
-    }
+    val laid =
+      if (bucketed) bucketLayout(afterCdc, clusterCols)
+      else ClusterLayout(afterCdc, clusterCols, boundsFrom = Some(source))
     // drop + quarantine tiers FILTER; warn + fail tiers only COUNT (all
     // four ride one observe on the write action — zero extra passes).
     // The named-observe fallback (no Observation handle) carries the gate
@@ -511,16 +496,6 @@ final class PipelineRunner(
     Rename(gated, cfg.renamedColumns)
   }
 
-  /** Full-recompute silver publish, made ATOMIC for readers: each run
-    * writes to a fresh versioned directory (`.../{entity}/v{N}`), then
-    * either repoints the existing table with `ALTER TABLE SET LOCATION`
-    * (a single catalog-metadata operation — readers see the old complete
-    * version until the switch, the new complete version after) or creates
-    * the table on first run. Old version dirs are removed AFTER the
-    * switch, so a reader that resolved the previous location mid-query
-    * still finds its files. This replaces the naive DROP + rewrite, whose
-    * window leaves the table missing — the parquet-catalog stand-in for a
-    * table format's atomic commit. */
   /** The bronze checkpoint's latest COMPLETED batch id (−1 before any
     * batch) — the silver skip's provenance source. Completed (the
     * `commits` log), not merely started: an interrupted batch replays,
@@ -534,13 +509,34 @@ final class PipelineRunner(
       st.getPath.getName.toLongOption).foldLeft(-1L)(math.max)
   }
 
+  /** The catalog location of table `fqn`; None for a view or a missing
+    * table. A metadata read, no listing. */
+  private def tableLocation(fqn: String): Option[org.apache.hadoop.fs.Path] =
+    if (!spark.catalog.tableExists(fqn)) None
+    else spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(fqn))
+      .storage.locationUri.map(new org.apache.hadoop.fs.Path(_))
+
+  /** True when table `fqn` is located in one of this runner's own `v<N>`
+    * version dirs under `basePath`. The no-change skips require it: their
+    * provenance props say what the table holds, not where, and a runner
+    * on another storage root that reuses the catalog name must publish
+    * under its own root. */
+  private def livesIn(fqn: String, basePath: String): Boolean = {
+    val base = new org.apache.hadoop.fs.Path(basePath)
+    val fs = base.getFileSystem(hconf)
+    tableLocation(fqn).exists(loc => loc.getName.matches("v\\d+") &&
+      fs.makeQualified(loc.getParent) == fs.makeQualified(base))
+  }
+
   /** Returns true when a publish happened, false when the no-change
     * skip fired. `skipIfUnchanged` (set by [[run]] unless
     * `republishUnchanged` forces the old behavior) ALLOWS the skip; the
     * decision itself is PROVENANCE-based — the silver's stored
     * consumed-bronze-batch marker must equal the checkpoint's latest
     * completed batch (self-healing after a crash between the bronze
-    * commit and this publish) AND the content fingerprint must match.
+    * commit and this publish), the content fingerprint must match, AND
+    * the table must live under this runner's root ([[livesIn]]).
     * Then the silver content is identical by construction, so the
     * republish (a full table rewrite in full mode) is pure waste: at
     * scale an idle trigger must cost metadata, not a rewrite (the SDP
@@ -561,7 +557,8 @@ final class PipelineRunner(
           tableProp(spark, fqn, ConfigFpProp)
             .contains(configFp(cfg, params.softDeletesEnabled)) &&
           tableProp(spark, fqn, ConsumedBronzeProp)
-            .contains(bronzeBatch.toString)) {
+            .contains(bronzeBatch.toString) &&
+          livesIn(fqn, silverPath(entity))) {
         log(s"$fqn: bronze unchanged since the last consumed batch " +
           s"($bronzeBatch) and an unchanged config - skipping the " +
           "silver republish (content identical by construction; delete " +
@@ -673,7 +670,8 @@ final class PipelineRunner(
   /** One incremental-silver merge at bucket granularity:
     * touched-buckets-of-previous-silver ∪ `batch` through the shared
     * transform, published with only the touched bucket dirs rewritten
-    * ([[publishBucketedGeneration]]).
+    * ([[publishBucketedGeneration]]); the strategy bodies build the
+    * frame and capture the change feed.
     *
     * The touched-bucket set is a `distinct().collect()` over the NEW
     * batch's bucket ids — bounded by `silverBuckets` ints, never by data
@@ -717,10 +715,76 @@ final class PipelineRunner(
           "(bucketed table vs base+delta table behind a merge view); " +
           "run a full refresh (--full-refresh) to switch")
     }
-    if (cfg.silverMerge == "merge_on_read")
-      mergeSilverBatchMor(entity, cfg, batch, batchId)
-    else
-      mergeSilverBatchCow(entity, cfg, batch, batchId)
+    val mor = cfg.silverMerge == "merge_on_read"
+    val rawFqn = params.silverRawFqn(entity)
+    // the bucket is computed on the bronze-vocabulary PK, BEFORE the
+    // rename projection, on both sides of the merge. Persist: the batch
+    // is consumed TWICE (touched-bucket distinct, then the merge write)
+    // and a foreachBatch frame recomputes from the source files each
+    // time — at the 100 TB design point a catch-up batch would
+    // otherwise pay the new-file ingest I/O twice
+    val withB = batch.withColumn(BucketCol, bucketOf(cfg.uniquePrimaryKey, n))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val touched = withB.select(BucketCol).distinct()
+        .collect().map(_.getInt(0)).toSet
+      // a merge-on-read store exists once its raw table does
+      if (touched.isEmpty &&
+          spark.catalog.tableExists(if (mor) rawFqn else fqn)) {
+        log(s"$fqn batch $batchId is empty; publishing nothing"); return
+      }
+      val pk = cfg.silverPrimaryKey
+      // the change feed's pre-image: the published rows of the batch's
+      // PKs, read from the touched buckets only
+      lazy val batchPKs = Rename(withB, cfg.renamedColumns)
+        .select(pk.map(col): _*).distinct()
+      def preImage: DataFrame = spark.table(fqn).where(inBuckets(touched))
+        .join(batchPKs, pk, "left_semi")
+      val obsName = s"expectations_${entity}_b$batchId"
+      val obs = Option.when(cfg.anyExpectations)(
+        new org.apache.spark.sql.Observation(obsName))
+      if (mor) {
+        mergeSilverBatchMor(entity, cfg, withB, batchId, touched, obs,
+          obsName)(preImage)
+        refreshMorView(entity, cfg)
+      } else
+        mergeSilverBatchCow(entity, cfg, withB, batchId, touched, obs,
+          obsName)(batchPKs, preImage)
+      val props = refTableProps(cfg) ++ Map(
+        "comment" -> (
+          if (mor) s"Silver deduplicated merge view for $entity " +
+            s"(incremental merge-on-read, $n PK-hash buckets over $rawFqn)"
+          else s"Silver deduplicated table for $entity (incremental, " +
+            s"$n PK-hash buckets)"),
+        "clustering_cols" -> cfg.clusteringCols.mkString(","),
+        BucketCountProp -> n.toString,
+        MergeStrategyProp -> cfg.silverMerge) ++
+        expectationMetrics(entity, "silver", fqn, obs)
+      if (mor) setViewProps(spark, fqn, props)
+      else setTableProps(spark, fqn, props)
+    } finally withB.unpersist()
+  }
+
+  /** The PK-hash bucket of a row: Murmur3 (the hash family Spark
+    * bucketing uses) of `pk`, mod `n`. The merge hashes the
+    * bronze-vocabulary PK, the rebucket the renamed one: same values,
+    * same bucket. */
+  private def bucketOf(pk: Seq[String], n: Int): Column =
+    pmod(hash(pk.map(col): _*), lit(n))
+
+  /** Rows of the given buckets — a partition filter on a bucketed table. */
+  private def inBuckets(buckets: Iterable[Int]): Column =
+    col(BucketCol).isin(buckets.toSeq.map(Int.box): _*)
+
+  /** The bucketed write layout: ONE hash exchange on the bucket plus a
+    * within-partition sort by (bucket, the cluster columns `df` has) —
+    * exactly the sort the dynamic partitioned write needs, so no second
+    * exchange and bounded open writers per task. */
+  private def bucketLayout(df: DataFrame, clusterCols: Seq[String])
+      : DataFrame = {
+    val cc = clusterCols.filter(df.columns.contains)
+    df.repartition(col(BucketCol))
+      .sortWithinPartitions((BucketCol +: cc).map(col): _*)
   }
 
   /** REBUCKET MIGRATION: rewrite an existing incremental-silver layout
@@ -749,7 +813,6 @@ final class PipelineRunner(
     }
 
   private def rebucketSilverLocked(entity: String, cfg: EntityConfig): Unit = {
-    import org.apache.hadoop.fs.Path
     val fqn = params.silverFqn(entity)
     val n = cfg.silverBuckets
     if (!spark.catalog.tableExists(fqn)) {
@@ -766,148 +829,67 @@ final class PipelineRunner(
       log(s"$fqn already at silver_buckets=$n; rebucket is a no-op"); return
     }
     log(s"$fqn rebucketing $recorded -> $n buckets")
-    // bucket = PK hash; the published table holds post-rename columns
-    // with the SAME values, so hashing the renamed PK names reproduces
-    // the merge path's bronze-vocabulary assignment exactly
-    val pkNew = cfg.uniquePrimaryKey
-      .map(p => cfg.renamedColumns.getOrElse(p, p))
-    val bucketOf = pmod(hash(pkNew.map(col): _*), lit(n))
-    val allBuckets = (0 until math.max(recorded, n)).toSet
-    val strategy = tableProp(spark, fqn, MergeStrategyProp)
-      .getOrElse("copy_on_write")
-    val clusterCols = cfg.clusteringCols
-    def layout(df: DataFrame): DataFrame = {
-      val cc = clusterCols.filter(df.columns.contains)
-      df.repartition(col(BucketCol))
-        .sortWithinPartitions((BucketCol +: cc).map(col): _*)
-    }
-    if (strategy == "copy_on_write") {
-      val cur = spark.table(fqn).drop(BucketCol)
-        .withColumn(BucketCol, bucketOf)
-      // publish writes to a NEW generation dir before any partition
-      // repoint, so the rewrite reads the old layout consistently
-      publishBucketedGeneration(fqn, silverPath(entity), layout(cur),
-        touched = allBuckets)
-      setTableProps(spark, fqn, Map(BucketCountProp -> n.toString))
-    } else {
-      // merge-on-read: materialize the MERGE VIEW (winners, tombstones
-      // collapsed — identical to compacting every bucket) as the new
-      // base generation, then drop every old partition incl. deltas
-      val rawFqn = params.silverRawFqn(entity)
-      val parts = morPartitions(rawFqn)
-      val cur = spark.table(fqn).drop(BucketCol)
-        .withColumn(BucketCol, bucketOf)
-        .withColumn(RetractedCol, lit(false))
-      val base = new Path(silverPath(entity))
-      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (_, target) = nextVersionDir(fs, base)
-      layout(cur).write.mode("overwrite").partitionBy(BucketCol)
-        .parquet(target.toString)
-      allBuckets.toSeq.sorted.foreach { k =>
-        val dir = new Path(target, s"$BucketCol=$k")
-        val hadBase = parts.exists(p => p._1 == k && p._2 == 0L)
-        (fs.exists(dir), hadBase) match {
-          case (true, true) => spark.sql(
-            s"ALTER TABLE $rawFqn PARTITION (`$BucketCol`=$k, " +
-              s"`$DeltaCol`=0) SET LOCATION '${dir.toString}'")
-          case (true, false) => spark.sql(
-            s"ALTER TABLE $rawFqn ADD PARTITION " +
-              s"(`$BucketCol`=$k, `$DeltaCol`=0) LOCATION '${dir.toString}'")
-          case (false, true) => spark.sql(
-            s"ALTER TABLE $rawFqn DROP IF EXISTS PARTITION " +
-              s"(`$BucketCol`=$k, `$DeltaCol`=0)")
-          case (false, false) => ()
-        }
-        parts.filter(p => p._1 == k && p._2 > 0L).foreach { case (_, d) =>
-          spark.sql(s"ALTER TABLE $rawFqn DROP IF EXISTS PARTITION " +
-            s"(`$BucketCol`=$k, `$DeltaCol`=$d)")
-        }
-      }
-      spark.catalog.refreshTable(rawFqn)
-      bucketedSupersedeAndVacuum(rawFqn, fs, base, target)
+    val mor = tableProp(spark, fqn, MergeStrategyProp)
+      .contains("merge_on_read")
+    // the published name is the logical table (for merge-on-read the
+    // merge VIEW: winners, tombstones collapsed — identical to compacting
+    // every bucket); its renamed PK holds the merge path's PK values, so
+    // the new buckets match what the merge will compute. The publish
+    // writes a NEW generation before any partition repoint, so the
+    // rewrite reads the old layout consistently; a merge-on-read base
+    // publish also drops every old delta partition.
+    val cur = spark.table(fqn).drop(BucketCol)
+      .withColumn(BucketCol, bucketOf(cfg.silverPrimaryKey, n))
+    publishBucketedGeneration(if (mor) params.silverRawFqn(entity) else fqn,
+      silverPath(entity),
+      bucketLayout(if (mor) cur.withColumn(RetractedCol, lit(false)) else cur,
+        cfg.clusteringCols),
+      touched = (0 until math.max(recorded, n)).toSet,
+      deltaGen = Option.when(mor)(0L))
+    if (mor) {
       // CREATE OR REPLACE VIEW wipes the view's properties — restore the
       // layout contract (count AND strategy) or the next merge's guard
       // misreads the table as a pre-strategy copy-on-write layout
       refreshMorView(entity, cfg)
       setViewProps(spark, fqn, Map(BucketCountProp -> n.toString,
         MergeStrategyProp -> "merge_on_read"))
-    }
+    } else setTableProps(spark, fqn, Map(BucketCountProp -> n.toString))
     log(s"$fqn rebucketed to $n buckets")
   }
 
   /** Copy-on-write merge (`silver_merge: "copy_on_write"`): the touched
     * buckets are REWRITTEN in full per trigger. */
   private def mergeSilverBatchCow(entity: String, cfg: EntityConfig,
-      batch: DataFrame, batchId: Long): Unit = {
+      withB: DataFrame, batchId: Long, touched: Set[Int],
+      obs: Option[org.apache.spark.sql.Observation], obsName: String)(
+      batchPKs: => DataFrame, preImage: => DataFrame): Unit = {
     val fqn = params.silverFqn(entity)
-    val n = cfg.silverBuckets
-    // deterministic PK-hash bucket (Murmur3, the same hash family Spark
-    // bucketing uses); computed on the bronze-vocabulary PK, BEFORE the
-    // rename projection, on both sides of the merge
-    val bucketOf = pmod(hash(cfg.uniquePrimaryKey.map(col): _*), lit(n))
-    // persist: the batch is consumed TWICE (touched-bucket distinct, then
-    // the merge write) and a foreachBatch frame recomputes from the
-    // source files each time — at the 100 TB design point a catch-up
-    // batch would otherwise pay the new-file ingest I/O twice
-    val withB = batch.withColumn(BucketCol, bucketOf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched = withB.select(BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSet
-      if (touched.isEmpty && spark.catalog.tableExists(fqn)) {
-        log(s"$fqn batch $batchId is empty; publishing nothing"); return
-      }
-      val prev =
-        if (spark.catalog.tableExists(fqn))
-          Rename(spark.table(fqn), cfg.renamedColumns.map(_.swap))
-            .where(col(BucketCol).isin(touched.toSeq.map(Int.box): _*))
-        else withB.limit(0)
-      // allowMissingColumns: schema evolution can widen either side mid-
-      // stream (an old silver lacks a just-evolved bronze column); the
-      // absent side null-fills, exactly like the bronze evolution path
-      val merged = prev.unionByName(withB, allowMissingColumns = true)
-      val obs = Option.when(cfg.anyExpectations)(
-        new org.apache.spark.sql.Observation(
-          s"expectations_${entity}_b$batchId"))
-      val frame = silverTransform(merged, cfg, obs,
-        s"expectations_${entity}_b$batchId", bucketCol = Some(BucketCol))
-      // CDF capture BEFORE the publish swaps partitions — the pre-image
-      // only exists now. The post-image re-runs the transform WITHOUT
-      // the Observation (its metrics must come from the publish action,
-      // not the diff) — one extra pass over the touched-bucket merge,
-      // the copy-on-write price of exact preimages.
-      // (a batch-0 first build skips image capture — dead weight, see
-      // the merge-on-read hook; the epoch latch still mints)
-      if (cdfOn(entity, cfg)) {
-        if (batchId == 0L && !spark.catalog.tableExists(fqn))
-          ensureCdfEpoch(entity)
-        else {
-          val pkNew = cfg.uniquePrimaryKey
-            .map(p => cfg.renamedColumns.getOrElse(p, p))
-          val batchPKs = Rename(withB, cfg.renamedColumns)
-            .select(pkNew.map(col): _*).distinct()
-          writeCdfBatch(entity, cfg, batchId)(
-            if (spark.catalog.tableExists(fqn))
-              spark.table(fqn)
-                .where(col(BucketCol).isin(touched.toSeq.map(Int.box): _*))
-                .join(batchPKs, pkNew, "left_semi")
-            else Rename(withB, cfg.renamedColumns).limit(0),
-            silverTransform(merged, cfg, None,
-                s"expectations_${entity}_b$batchId",
-                bucketCol = Some(BucketCol))
-              .join(batchPKs, pkNew, "left_semi"))
-        }
-      }
-      publishBucketedGeneration(fqn, silverPath(entity), frame, touched)
-      val comment = s"Silver deduplicated table for $entity (incremental, " +
-        s"$n PK-hash buckets)"
-      setTableProps(spark, fqn, refTableProps(cfg) ++ Map(
-        "comment" -> comment,
-        "clustering_cols" -> cfg.clusteringCols.mkString(","),
-        BucketCountProp -> n.toString,
-        MergeStrategyProp -> "copy_on_write") ++
-        expectationMetrics(entity, "silver", fqn, obs))
-    } finally withB.unpersist()
+    val exists = spark.catalog.tableExists(fqn)
+    val prev =
+      if (exists)
+        Rename(spark.table(fqn), cfg.renamedColumns.map(_.swap))
+          .where(inBuckets(touched))
+      else withB.limit(0)
+    // allowMissingColumns: schema evolution can widen either side mid-
+    // stream (an old silver lacks a just-evolved bronze column); the
+    // absent side null-fills, exactly like the bronze evolution path
+    val merged = prev.unionByName(withB, allowMissingColumns = true)
+    val frame = silverTransform(merged, cfg, obs, obsName, bucketed = true)
+    // CDF capture BEFORE the publish swaps partitions — the pre-image
+    // only exists now. The post-image re-runs the transform WITHOUT
+    // the Observation (its metrics must come from the publish action,
+    // not the diff) — one extra pass over the touched-bucket merge,
+    // the copy-on-write price of exact preimages.
+    // (a batch-0 first build skips image capture — dead weight, see
+    // the merge-on-read hook; the epoch latch still mints)
+    if (cdfOn(entity, cfg)) {
+      if (batchId == 0L && !exists) ensureCdfEpoch(entity)
+      else writeCdfBatch(entity, cfg, batchId)(
+        if (exists) preImage else Rename(withB, cfg.renamedColumns).limit(0),
+        silverTransform(merged, cfg, None, obsName, bucketed = true)
+          .join(batchPKs, cfg.silverPrimaryKey, "left_semi"))
+    }
+    publishBucketedGeneration(fqn, silverPath(entity), frame, touched)
   }
 
   // ---- merge-on-read incremental silver -----------------------------------
@@ -930,101 +912,71 @@ final class PipelineRunner(
     * trade when triggers are frequent and batches are small relative to
     * a bucket. */
   private def mergeSilverBatchMor(entity: String, cfg: EntityConfig,
-      batch: DataFrame, batchId: Long): Unit = {
-    val fqn = params.silverFqn(entity)
+      withB: DataFrame, batchId: Long, touched: Set[Int],
+      obs: Option[org.apache.spark.sql.Observation], obsName: String)(
+      preImage: => DataFrame): Unit = {
     val rawFqn = params.silverRawFqn(entity)
-    val n = cfg.silverBuckets
-    val bucketOf = pmod(hash(cfg.uniquePrimaryKey.map(col): _*), lit(n))
-    // persist: consumed twice (touched-bucket distinct + the write)
-    val withB = batch.withColumn(BucketCol, bucketOf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched = withB.select(BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSet
-      if (touched.isEmpty && spark.catalog.tableExists(rawFqn)) {
-        log(s"$fqn batch $batchId is empty; publishing nothing"); return
-      }
-      val obs = Option.when(cfg.anyExpectations)(
-        new org.apache.spark.sql.Observation(
-          s"expectations_${entity}_b$batchId"))
-      val obsName = s"expectations_${entity}_b$batchId"
-      if (!spark.catalog.tableExists(rawFqn)) {
-        // first merge = the base build: the regular silver transform
-        // (keep-latest, CDC filter, expectations gate, bucket layout,
-        // rename). Dropped rows need no tombstone — there is no base
-        // to retract from yet.
-        val frame = silverTransform(withB, cfg, obs, obsName,
-          bucketCol = Some(BucketCol))
-          .withColumn(RetractedCol, lit(false))
-        // CDF: a batch-0 base build writes NO images — every consumer's
-        // first delta is an initial load of the live table and every
-        // later range is (from ≥ 0, to], so gen-0 images are dead
-        // weight (at 100 TB, a full-table copy). The epoch latch still
-        // mints so later merges keep the feed current. A base build at
-        // a HIGHER batch id (a table dropped out from under a live
-        // checkpoint) still captures, since ranges can reach it.
-        if (cdfOn(entity, cfg)) {
-          if (batchId == 0L) ensureCdfEpoch(entity)
-          else {
-            val cleanNew = silverTransform(withB, cfg, None, obsName,
-              bucketCol = Some(BucketCol))
-            writeCdfBatch(entity, cfg, batchId)(cleanNew.limit(0),
-              cleanNew)
-          }
+    if (!spark.catalog.tableExists(rawFqn)) {
+      // first merge = the base build: the regular silver transform
+      // (keep-latest, CDC filter, expectations gate, bucket layout,
+      // rename). Dropped rows need no tombstone — there is no base
+      // to retract from yet.
+      val frame = silverTransform(withB, cfg, obs, obsName, bucketed = true)
+        .withColumn(RetractedCol, lit(false))
+      // CDF: a batch-0 base build writes NO images — every consumer's
+      // first delta is an initial load of the live table and every
+      // later range is (from ≥ 0, to], so gen-0 images are dead
+      // weight (at 100 TB, a full-table copy). The epoch latch still
+      // mints so later merges keep the feed current. A base build at
+      // a HIGHER batch id (a table dropped out from under a live
+      // checkpoint) still captures, since ranges can reach it.
+      if (cdfOn(entity, cfg)) {
+        if (batchId == 0L) ensureCdfEpoch(entity)
+        else {
+          val cleanNew = silverTransform(withB, cfg, None, obsName,
+            bucketed = true)
+          writeCdfBatch(entity, cfg, batchId)(cleanNew.limit(0),
+            cleanNew)
         }
-        publishMorGeneration(rawFqn, silverPath(entity), frame, touched,
-          deltaGen = 0L)
-      } else {
-        val frame = silverDeltaFrame(withB, cfg, obs)
-        // CDF capture BEFORE the delta partitions register — the
-        // pre-image is the CURRENT merge view (touched-bucket-pruned,
-        // semi-joined to the batch PKs: the one read-side cost CDC adds
-        // to merge-on-read's O(batch) write, the same trade Delta/Hudi
-        // CDC makes on MOR tables). The post-image is NOT the raw
-        // delta: a batch row can LOSE the view's keep-latest ordering
-        // to the existing winner (a replay under the same injected
-        // clock, an out-of-order file), and emitting its image would
-        // be a change silver never made — so the post state re-runs
-        // the SAME keep-latest over current-winners ∪ delta winners
-        // (tombstone winners retract their PK, surfacing as 'delete'
-        // via the diff with the PRE-image row — the standard CDC
-        // delete image; a losing batch row leaves post == pre and
-        // diffs to nothing).
-        if (cdfOn(entity, cfg)) {
-          val pkNew = cfg.uniquePrimaryKey
-            .map(p => cfg.renamedColumns.getOrElse(p, p))
-          val batchPKs = Rename(withB, cfg.renamedColumns)
-            .select(pkNew.map(col): _*).distinct()
-          val pre = spark.table(fqn)
-            .where(col(BucketCol).isin(touched.toSeq.map(Int.box): _*))
-            .join(batchPKs, pkNew, "left_semi")
-          writeCdfBatch(entity, cfg, batchId)(
-            pre,
-            Dedup.latestByIngestion(
-                pre.withColumn(RetractedCol, lit(false))
-                  .unionByName(silverDeltaFrame(withB, cfg, None),
-                    allowMissingColumns = true),
-                pkNew)
-              .filter(!col(RetractedCol)).drop(RetractedCol, DeltaCol))
-        }
-        // delta generation id: unique per merge. batchId is monotone per
-        // checkpoint; guard against a manually reset checkpoint by also
-        // clearing the max delta gen already registered.
-        val gen = math.max(math.max(batchId, 1L),
-          morPartitions(rawFqn).map(_._2).maxOption.getOrElse(0L) + 1L)
-        publishMorGeneration(rawFqn, silverPath(entity), frame, touched,
-          deltaGen = gen)
-        compactMorBuckets(entity, cfg, touched)
       }
-      refreshMorView(entity, cfg)
-      setViewProps(spark, fqn, refTableProps(cfg) ++ Map(
-        "comment" -> (s"Silver deduplicated merge view for $entity " +
-          s"(incremental merge-on-read, $n PK-hash buckets over $rawFqn)"),
-        "clustering_cols" -> cfg.clusteringCols.mkString(","),
-        BucketCountProp -> n.toString,
-        MergeStrategyProp -> "merge_on_read") ++
-        expectationMetrics(entity, "silver", fqn, obs))
-    } finally withB.unpersist()
+      publishBucketedGeneration(rawFqn, silverPath(entity), frame, touched,
+        deltaGen = Some(0L))
+    } else {
+      val frame = silverDeltaFrame(withB, cfg, obs)
+      // CDF capture BEFORE the delta partitions register — the
+      // pre-image is the CURRENT merge view (touched-bucket-pruned,
+      // semi-joined to the batch PKs: the one read-side cost CDC adds
+      // to merge-on-read's O(batch) write, the same trade Delta/Hudi
+      // CDC makes on MOR tables). The post-image is NOT the raw
+      // delta: a batch row can LOSE the view's keep-latest ordering
+      // to the existing winner (a replay under the same injected
+      // clock, an out-of-order file), and emitting its image would
+      // be a change silver never made — so the post state re-runs
+      // the SAME keep-latest over current-winners ∪ delta winners
+      // (tombstone winners retract their PK, surfacing as 'delete'
+      // via the diff with the PRE-image row — the standard CDC
+      // delete image; a losing batch row leaves post == pre and
+      // diffs to nothing).
+      if (cdfOn(entity, cfg)) {
+        val pre = preImage
+        writeCdfBatch(entity, cfg, batchId)(
+          pre,
+          Dedup.latestByIngestion(
+              pre.withColumn(RetractedCol, lit(false))
+                .unionByName(silverDeltaFrame(withB, cfg, None),
+                  allowMissingColumns = true),
+              cfg.silverPrimaryKey)
+            .filter(!col(RetractedCol)).drop(RetractedCol, DeltaCol))
+      }
+      // delta generation id: unique per merge. batchId is monotone per
+      // checkpoint; guard against a manually reset checkpoint by also
+      // clearing the max delta gen already registered.
+      val gen = math.max(math.max(batchId, 1L),
+        bucketPartitions(rawFqn).map(_._2).maxOption.getOrElse(0L) + 1L)
+      publishBucketedGeneration(rawFqn, silverPath(entity), frame, touched,
+        deltaGen = Some(gen))
+      compactMorBuckets(entity, cfg, touched)
+    }
   }
 
   /** The DELTA transform: the batch's per-PK-latest rows, CLASSIFIED
@@ -1062,74 +1014,19 @@ final class PipelineRunner(
       case None => latest
     }
     val classified = observed.withColumn(RetractedCol, del || !passes)
-    // same physical discipline as the bucketed transform: ONE hash
-    // exchange on the bucket + a within-partition sort — exactly what
-    // the partitioned write needs, no second exchange
+    // same physical discipline as the bucketed transform
     val newToOld = cfg.renamedColumns.map(_.swap)
-    val clusterCols = cfg.clusteringCols
-      .map(c => newToOld.getOrElse(c, c))
-      .filter(classified.columns.contains)
-    val laid = classified.repartition(col(BucketCol))
-      .sortWithinPartitions((BucketCol +: clusterCols).map(col): _*)
-    Rename(laid, cfg.renamedColumns)
+    Rename(bucketLayout(classified,
+        cfg.clusteringCols.map(c => newToOld.getOrElse(c, c))),
+      cfg.renamedColumns)
   }
 
-  /** Publish one merge-on-read generation: write `frame` hive-partitioned
-    * by bucket into a fresh `v{N}` dir, then register each touched bucket
-    * dir as partition `(_bucket=k, _delta=deltaGen)` of the raw table —
-    * `deltaGen = 0` is the bucket's BASE (the creation build and
-    * compaction results), `> 0` a delta. Existing partitions are never
-    * touched: a delta publish is pure ADD PARTITION, so untouched buckets
-    * and prior deltas keep their dirs and the same in-flight-reader
-    * guarantee as [[publishBucketedGeneration]] holds. */
-  private def publishMorGeneration(rawFqn: String, basePathStr: String,
-      frame: DataFrame, touched: Set[Int], deltaGen: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val base = new Path(basePathStr)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (_, target) = nextVersionDir(fs, base)
-
-    frame.write.mode("overwrite").partitionBy(BucketCol)
-      .parquet(target.toString)
-
-    if (!spark.catalog.tableExists(rawFqn)) {
-      // schema from frame (not a read-back): an all-rows-gated first
-      // batch writes no partition dir at all. Partition columns last,
-      // per datasource partitioned-table DDL; `_delta` lives ONLY in
-      // the catalog partition values, never in data files.
-      val dataCols = StructType(frame.schema.fields
-        .filterNot(_.name == BucketCol))
-      spark.sql(s"CREATE TABLE $rawFqn (${dataCols.toDDL}, " +
-        s"`$BucketCol` INT, `$DeltaCol` BIGINT) USING parquet " +
-        s"PARTITIONED BY (`$BucketCol`, `$DeltaCol`) " +
-        s"LOCATION '${base.toString}'")
-    } else {
-      val existingCols = spark.table(rawFqn).schema.fieldNames
-        .map(_.toLowerCase).toSet
-      val newFields = frame.schema.fields
-        .filterNot(f => existingCols.contains(f.name.toLowerCase))
-      if (newFields.nonEmpty)
-        spark.sql(s"ALTER TABLE $rawFqn ADD COLUMNS " +
-          s"(${StructType(newFields).toDDL})")
-    }
-    touched.toSeq.sorted.foreach { k =>
-      val dir = new Path(target, s"$BucketCol=$k")
-      // every touched bucket dir exists on the delta path (tombstones
-      // are written, not dropped); on the base path a fully-gated
-      // bucket writes nothing — correct contents, nothing to register
-      if (fs.exists(dir))
-        spark.sql(s"ALTER TABLE $rawFqn ADD PARTITION " +
-          s"(`$BucketCol`=$k, `$DeltaCol`=$deltaGen) " +
-          s"LOCATION '${dir.toString}'")
-    }
-    spark.catalog.refreshTable(rawFqn)
-    bucketedSupersedeAndVacuum(rawFqn, fs, base, target)
-  }
-
-  /** Raw-table partition inventory: (bucket, deltaGen) pairs from the
-    * catalog — bounded by buckets × (compact_after + 1), pure metadata. */
-  private def morPartitions(rawFqn: String): Seq[(Int, Long)] =
-    spark.sql(s"SHOW PARTITIONS $rawFqn").collect().toSeq
+  /** The catalog partition inventory of a bucketed silver table as
+    * (bucket, deltaGen) pairs — deltaGen 0 on a copy-on-write table,
+    * which has no `_delta` partition column. Bounded by buckets ×
+    * (compact_after + 1), pure metadata. */
+  private def bucketPartitions(fqn: String): Seq[(Int, Long)] =
+    spark.sql(s"SHOW PARTITIONS $fqn").collect().toSeq
       .map(_.getString(0)).flatMap { s =>
         val kv = s.split('/').flatMap { part =>
           part.split("=", 2) match {
@@ -1139,68 +1036,36 @@ final class PipelineRunner(
         }.toMap
         for {
           b <- kv.get(BucketCol).flatMap(_.toIntOption)
-          d <- kv.get(DeltaCol).flatMap(_.toLongOption)
+          d <- kv.get(DeltaCol).fold(Option(0L))(_.toLongOption)
         } yield (b, d)
       }
 
   /** Compact every candidate bucket holding MORE than
     * `silver_compact_after` delta partitions: merge its base ∪ deltas
     * with the same keep-latest ordering the view uses, drop tombstone
-    * winners, write the result as the bucket's new BASE generation, and
-    * drop its delta partitions. Read is partition-pruned to exactly the
-    * compacted buckets; untouched buckets never move. The view contents
-    * are invariant under compaction (same ordering, same tombstone
-    * filter) — pinned by spec. */
+    * winners, and publish the result as the bucket's new BASE
+    * generation, which also drops its delta partitions
+    * ([[publishBucketedGeneration]] at `_delta = 0`). Read is
+    * partition-pruned to exactly the compacted buckets; untouched
+    * buckets never move. The view contents are invariant under
+    * compaction (same ordering, same tombstone filter) — pinned by
+    * spec. */
   private def compactMorBuckets(entity: String, cfg: EntityConfig,
       candidates: Set[Int]): Unit = {
-    import org.apache.hadoop.fs.Path
     val rawFqn = params.silverRawFqn(entity)
-    val parts = morPartitions(rawFqn)
-    val deltasPerBucket: Map[Int, Seq[Long]] = parts.filter(_._2 > 0L)
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val deltas = bucketPartitions(rawFqn).filter(_._2 > 0L).groupBy(_._1)
     val toCompact = candidates.toSeq.sorted.filter(k =>
-      deltasPerBucket.getOrElse(k, Nil).sizeIs > cfg.silverCompactAfter)
+      deltas.getOrElse(k, Nil).sizeIs > cfg.silverCompactAfter)
     if (toCompact.isEmpty) return
     log(s"$rawFqn compacting buckets ${toCompact.mkString(",")} " +
       s"(> ${cfg.silverCompactAfter} deltas)")
-    val pkNew = cfg.uniquePrimaryKey
-      .map(p => cfg.renamedColumns.getOrElse(p, p))
-    val rows = spark.table(rawFqn)
-      .where(col(BucketCol).isin(toCompact.map(Int.box): _*))
-    val winners = Dedup.latestByIngestion(rows, pkNew)
+    val winners = Dedup.latestByIngestion(
+        spark.table(rawFqn).where(inBuckets(toCompact)), cfg.silverPrimaryKey)
       .filter(!col(RetractedCol))
       .drop(DeltaCol)
-    val clusterCols = cfg.clusteringCols.filter(winners.columns.contains)
-    val laid = winners.repartition(col(BucketCol))
-      .sortWithinPartitions((BucketCol +: clusterCols).map(col): _*)
-
-    val base = new Path(silverPath(entity))
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (_, target) = nextVersionDir(fs, base)
-    laid.write.mode("overwrite").partitionBy(BucketCol)
-      .parquet(target.toString)
-    toCompact.foreach { k =>
-      val dir = new Path(target, s"$BucketCol=$k")
-      val hadBase = parts.exists(p => p._1 == k && p._2 == 0L)
-      (fs.exists(dir), hadBase) match {
-        case (true, true) => spark.sql(
-          s"ALTER TABLE $rawFqn PARTITION (`$BucketCol`=$k, `$DeltaCol`=0) " +
-            s"SET LOCATION '${dir.toString}'")
-        case (true, false) => spark.sql(
-          s"ALTER TABLE $rawFqn ADD PARTITION " +
-            s"(`$BucketCol`=$k, `$DeltaCol`=0) LOCATION '${dir.toString}'")
-        case (false, true) => spark.sql(
-          s"ALTER TABLE $rawFqn DROP IF EXISTS PARTITION " +
-            s"(`$BucketCol`=$k, `$DeltaCol`=0)")
-        case (false, false) => () // every version of every PK retracted
-      }
-      deltasPerBucket.getOrElse(k, Nil).foreach { d =>
-        spark.sql(s"ALTER TABLE $rawFqn DROP IF EXISTS PARTITION " +
-          s"(`$BucketCol`=$k, `$DeltaCol`=$d)")
-      }
-    }
-    spark.catalog.refreshTable(rawFqn)
-    bucketedSupersedeAndVacuum(rawFqn, fs, base, target)
+    publishBucketedGeneration(rawFqn, silverPath(entity),
+      bucketLayout(winners, cfg.clusteringCols), toCompact.toSet,
+      deltaGen = Some(0L))
   }
 
   /** (Re)create the published silver MERGE VIEW over the raw base+delta
@@ -1229,8 +1094,7 @@ final class PipelineRunner(
     val fqn = params.silverFqn(entity)
     val rawFqn = params.silverRawFqn(entity)
     val raw = spark.table(rawFqn)
-    val pkNew = cfg.uniquePrimaryKey
-      .map(p => cfg.renamedColumns.getOrElse(p, p))
+    val pkNew = cfg.silverPrimaryKey
     val pkList = pkNew.map(q).mkString(", ")
     val joinCond = pkNew.map(p => s"b.${q(p)} <=> d.${q(p)}")
       .mkString(" AND ")
@@ -1440,7 +1304,10 @@ final class PipelineRunner(
   /** Atomic versioned publish shared by the silver and gold batch tables:
     * write `df` to a fresh `.../v{N}` dir, widen the catalog schema
     * additively, repoint with `SET LOCATION` (or create on first run),
-    * then vacuum superseded versions past the retention window. A
+    * then vacuum superseded versions past the retention window. The
+    * repoint is one catalog operation, so readers see one complete
+    * version or the next, never a missing table (the parquet-catalog
+    * stand-in for a table format's atomic commit). A
     * `preCommit` hook runs after the write but before the repoint; if it
     * throws, the candidate dir is deleted and the table keeps its
     * previous version (the `expect_all_or_fail` abort path). */
@@ -1457,15 +1324,8 @@ final class PipelineRunner(
         throw e
     }
     if (spark.catalog.tableExists(fqn)) {
-      // S7: widen the catalog schema by any evolved columns BEFORE the
-      // location switch (additive-only, mirroring bronze evolution)
-      val existingCols = spark.table(fqn).schema.fieldNames
-        .map(_.toLowerCase).toSet
-      val newFields = df.schema.fields
-        .filterNot(f => existingCols.contains(f.name.toLowerCase))
-      if (newFields.nonEmpty)
-        spark.sql(s"ALTER TABLE $fqn ADD COLUMNS " +
-          s"(${StructType(newFields).toDDL})")
+      // widen BEFORE the location switch
+      widenCatalogSchema(fqn, df.schema)
       spark.sql(s"ALTER TABLE $fqn SET LOCATION '${target.toString}'")
       spark.catalog.refreshTable(fqn)
     } else {
@@ -1474,6 +1334,19 @@ final class PipelineRunner(
         s"LOCATION '${target.toString}'")
     }
     supersedeAndVacuum(fs, oldVersions)
+  }
+
+  /** S7: widen the catalog schema of `fqn` by every field of `schema` it
+    * lacks (case-insensitive; additive-only, mirroring bronze
+    * evolution). */
+  private def widenCatalogSchema(fqn: String, schema: StructType): Unit = {
+    val existingCols = spark.table(fqn).schema.fieldNames
+      .map(_.toLowerCase).toSet
+    val newFields = schema.fields
+      .filterNot(f => existingCols.contains(f.name.toLowerCase))
+    if (newFields.nonEmpty)
+      spark.sql(s"ALTER TABLE $fqn ADD COLUMNS " +
+        s"(${StructType(newFields).toDDL})")
   }
 
   /** List existing `v{N}` version dirs and allocate the next one. */
@@ -1515,22 +1388,30 @@ final class PipelineRunner(
     }
   }
 
-  /** Bucket-granular versioned publish for incremental silver
-    * ([[mergeSilverBatch]]). `df` holds the merged contents of exactly the
-    * `touched` buckets, bucket-tagged in [[PipelineRunner.BucketCol]].
+  /** Bucket-granular versioned publish — the ONE write-and-swap path of
+    * incremental silver: the copy-on-write merge, the merge-on-read base
+    * build, delta publish and compaction, and both rebucket branches.
+    * `frame` holds the new contents of exactly the `touched` buckets,
+    * bucket-tagged in [[PipelineRunner.BucketCol]]. `deltaGen` is the
+    * partition spec: None = `_bucket` alone (the copy-on-write table),
+    * Some(g) = `_bucket` plus `_delta = g` (the merge-on-read raw table:
+    * 0 is a bucket's BASE, > 0 a delta).
     *
     * The catalog's partition registry IS the manifest: the table's own
     * location is the stable base dir (it never changes and holds no data
-    * files), while every `_bucket=k` partition carries an explicit
-    * location pointing into some generation dir `v{N}/_bucket=k`. A
-    * publish (1) writes `df` hive-partitioned by `_bucket` into a fresh
-    * `v{N}` — only touched bucket dirs materialize; (2) widens the
-    * catalog schema additively (S7); (3) repoints each touched bucket
-    * with ONE catalog op — `ALTER TABLE .. PARTITION SET LOCATION` when
-    * the bucket existed, `ADD PARTITION .. LOCATION` when it is new, and
-    * `DROP PARTITION` when every PK in it was retracted (the bucket then
-    * has no dir in `v{N}`, which is the correct contents); (4) marks and
-    * vacuums superseded BUCKET dirs under the shared retention window
+    * files), while every partition carries an explicit location pointing
+    * into some generation dir `v{N}/_bucket=k`. A publish (1) writes
+    * `frame` hive-partitioned by `_bucket` into a fresh `v{N}` — only
+    * touched bucket dirs materialize; (2) creates the table (schema from
+    * `frame`, not a read-back: an all-rows-retracted first batch writes
+    * no dir) or widens its schema additively; (3) repoints each touched
+    * bucket with ONE catalog op — `SET LOCATION` when its partition
+    * exists, `ADD PARTITION` when it is new, `DROP PARTITION` when the
+    * bucket has no dir in `v{N}` (every PK retracted: the correct
+    * contents) — then drops the bucket's partitions at a HIGHER
+    * `_delta`, so a base supersedes its deltas only once it is
+    * registered; (4) refreshes the table; (5) marks and vacuums
+    * superseded BUCKET dirs under the shared retention window
     * ([[bucketedSupersedeAndVacuum]]).
     *
     * Untouched buckets are never written, moved, or even mentioned: their
@@ -1550,51 +1431,54 @@ final class PipelineRunner(
     * restore source within the retention window, not a whole-table
     * snapshot (whole-table time travel rides the full publish path). */
   private def publishBucketedGeneration(fqn: String, basePathStr: String,
-      df: DataFrame, touched: Set[Int]): Unit = {
+      frame: DataFrame, touched: Set[Int], deltaGen: Option[Long] = None)
+      : Unit = {
     import org.apache.hadoop.fs.Path
     val base = new Path(basePathStr)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(hconf)
     val (_, target) = nextVersionDir(fs, base)
 
-    df.write.mode("overwrite").partitionBy(BucketCol)
+    frame.write.mode("overwrite").partitionBy(BucketCol)
       .parquet(target.toString)
 
-    val existingParts: Set[Int] =
+    val partCols = BucketCol +: deltaGen.map(_ => DeltaCol).toSeq
+    val existingParts: Seq[(Int, Long)] =
       if (!spark.catalog.tableExists(fqn)) {
-        // schema from df (not a read-back): an all-rows-retracted first
-        // batch writes no partition dir at all, leaving nothing to infer.
-        // Partition column last, per datasource partitioned-table DDL.
-        val dataCols = StructType(df.schema.fields
+        // partition columns last, per datasource partitioned-table DDL
+        val dataCols = StructType(frame.schema.fields
           .filterNot(_.name == BucketCol))
+        val partDdl = partCols.map(c =>
+          s"`$c` ${if (c == BucketCol) "INT" else "BIGINT"}")
         spark.sql(s"CREATE TABLE $fqn (${dataCols.toDDL}, " +
-          s"`$BucketCol` INT) USING parquet " +
-          s"PARTITIONED BY (`$BucketCol`) LOCATION '${base.toString}'")
-        Set.empty
+          s"${partDdl.mkString(", ")}) USING parquet " +
+          s"PARTITIONED BY (${partCols.map(c => s"`$c`").mkString(", ")}) " +
+          s"LOCATION '${base.toString}'")
+        Nil
       } else {
-        val existingCols = spark.table(fqn).schema.fieldNames
-          .map(_.toLowerCase).toSet
-        val newFields = df.schema.fields
-          .filterNot(f => existingCols.contains(f.name.toLowerCase))
-        if (newFields.nonEmpty)
-          spark.sql(s"ALTER TABLE $fqn ADD COLUMNS " +
-            s"(${StructType(newFields).toDDL})")
-        spark.sql(s"SHOW PARTITIONS $fqn").collect()
-          .flatMap(_.getString(0).stripPrefix(s"$BucketCol=").toIntOption)
-          .toSet
+        widenCatalogSchema(fqn, frame.schema)
+        bucketPartitions(fqn)
       }
 
+    val g = deltaGen.getOrElse(0L)
+    def spec(k: Int, d: Long): String =
+      partCols.zip(Seq(k.toLong, d)).map { case (c, v) => s"`$c`=$v" }
+        .mkString(", ")
     touched.toSeq.sorted.foreach { k =>
       val dir = new Path(target, s"$BucketCol=$k")
-      (fs.exists(dir), existingParts.contains(k)) match {
+      (fs.exists(dir), existingParts.contains((k, g))) match {
         case (true, true) => spark.sql(
-          s"ALTER TABLE $fqn PARTITION (`$BucketCol`=$k) " +
+          s"ALTER TABLE $fqn PARTITION (${spec(k, g)}) " +
             s"SET LOCATION '${dir.toString}'")
         case (true, false) => spark.sql(
-          s"ALTER TABLE $fqn ADD PARTITION (`$BucketCol`=$k) " +
+          s"ALTER TABLE $fqn ADD PARTITION (${spec(k, g)}) " +
             s"LOCATION '${dir.toString}'")
         case (false, true) => spark.sql(
-          s"ALTER TABLE $fqn DROP IF EXISTS PARTITION (`$BucketCol`=$k)")
+          s"ALTER TABLE $fqn DROP IF EXISTS PARTITION (${spec(k, g)})")
         case (false, false) => () // retracted bucket that never existed
+      }
+      existingParts.filter(p => p._1 == k && p._2 > g).foreach { p =>
+        spark.sql(
+          s"ALTER TABLE $fqn DROP IF EXISTS PARTITION (${spec(k, p._2)})")
       }
     }
     spark.catalog.refreshTable(fqn)
@@ -1982,8 +1866,7 @@ final class PipelineRunner(
         "a fresh epoch) or restore the original checkpoint")
     val dir = new Path(root, s"b$batchId")
     if (!fs.exists(dir)) {
-      val pkNew = cfg.uniquePrimaryKey
-        .map(p => cfg.renamedColumns.getOrElse(p, p))
+      val pkNew = cfg.silverPrimaryKey
       val oldW = mkOld.drop(PipelineRunner.BucketCol).localCheckpoint(true)
       val newW = mkNew.drop(PipelineRunner.BucketCol).localCheckpoint(true)
       try {
@@ -2618,8 +2501,7 @@ final class PipelineRunner(
           liveVersion(entity), GoldAggOps.lastBatchMarker(storeDir),
           (batch, id) => GoldAggOps.aggBatch(batch, id, BridgeQueryId, a,
             storeDir, signCol = Some("_cdc_sign"),
-            compactAfter = g.compactAfter,
-            compactBackstop = g.compactBackstop))
+            compactAfter = g.compactAfter))
         GoldAggOps.readMart(spark, storeDir, a)
       case None =>
         val star = joinStar.get
@@ -2655,11 +2537,16 @@ final class PipelineRunner(
             liveVersion(entity), GoldJoinOps.factMarker(storeDir),
             (batch, id) => GoldJoinOps.factBatch(batch, id, BridgeQueryId,
               star, storeDir, g.compactAfter))
-        // OVERLAP the independent feeds (opt guide §2.6 — the engine's
-        // resolved-graph concurrency applied INSIDE one mart): the fact
-        // and dim feeds write disjoint substores whose batches the
-        // per-store lock + seq/marker discipline already serializes, and
-        // any batch interleaving converges to the same mart state
+        // Run the feeds on a pool (opt guide §2.6). What overlaps is
+        // only the work OUTSIDE the sink calls: fact and dim batches
+        // serialize on the mart's store lock, and each delta is
+        // evaluated inside its sink body under that lock. A full-mode
+        // input's delta probe (the `tableChanges` diff + emptiness check
+        // in deltaFrame) runs before the lock, so those probes overlap;
+        // an incremental-silver input's probe is an fs-metadata check,
+        // so for such marts (cdc_trickle's orders ⋈ customer) the pool
+        // overlaps nothing and one feed's drain waits for the other's
+        // batch. Any batch interleaving converges to the same mart state
         // (factBatch derives against the dims current at its batch;
         // dimBatch re-derives the affected facts). Engages only once
         // every dim store exists: on a VIRGIN mart the fact feed must not
@@ -3178,7 +3065,8 @@ final class PipelineRunner(
     * crash after a silver publish but before gold self-heals (the
     * stored marker still names the superseded version), and a dim
     * republish anywhere in the chain forces the mart — plus the content
-    * fingerprint must match. */
+    * fingerprint must match and the table must live under this runner's
+    * root ([[livesIn]]). */
   def runGold(entity: String, cfg: EntityConfig,
       fullRefresh: Boolean = false,
       skipIfUnchanged: Boolean = false): Boolean = cfg.gold.exists { g =>
@@ -3189,7 +3077,8 @@ final class PipelineRunner(
         tableProp(spark, fqn, ConfigFpProp)
           .contains(configFp(cfg, params.softDeletesEnabled)) &&
         inputsNow.exists(i =>
-          tableProp(spark, fqn, GoldInputsProp).contains(i))) {
+          tableProp(spark, fqn, GoldInputsProp).contains(i)) &&
+        livesIn(fqn, goldPath(entity))) {
       log(s"$fqn: every input at its last-consumed version " +
         s"(${inputsNow.get}) and an unchanged config - skipping the " +
         "gold republish (content identical by construction)")

@@ -97,6 +97,30 @@ class PipelineSpec extends AnyFunSuite {
   private def writeConfig(src: String): Unit =
     Files.writeString(Path.of(src, "dp_config_template.json"), configJson)
 
+  /** Spark jobs started while `f` runs (the listener bus drained on
+    * both sides) — a deterministic cost counter where wall time is noise. */
+  private def jobsOf(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.graft.BusAccess.drain(sc)
+    sc.addSparkListener(counter)
+    try { f; org.apache.spark.graft.BusAccess.drain(sc) }
+    finally sc.removeSparkListener(counter)
+    n.get
+  }
+
+  /** Job budgets of the single-batch merges the two bucketed-silver
+    * specs run: the most jobs seen over three runs of the code before
+    * every bucketed write went through one publish. A merge that needs
+    * more jobs fails its spec. */
+  private val CowMergeJobBudget = 10
+  private val MorMergeJobBudget = 11
+
   /** `republish = true` disables the no-change run skip — for tests
     * that exercise the republish machinery itself by re-running over an
     * unchanged feed (version rotation, per-publish event-log rows,
@@ -1173,6 +1197,36 @@ class PipelineSpec extends AnyFunSuite {
       "stale projection values survived the config-edit rebuild")
   }
 
+  test("no-change run skip across storage roots: a runner on a fresh " +
+      "root that reuses a catalog name publishes silver and gold under " +
+      "its own root instead of skipping") {
+    val src = tmpDir("ncr-src")
+    Files.writeString(Path.of(src, "dp_config_template.json"),
+      """{"sales": {"raw_file_format": "parquet",
+        |  "unique_primary_key": ["sale_id"],
+        |  "gold": {"cadence": "streaming",
+        |    "join": [{"entity": "shops", "on": "shop_id = s_id"}],
+        |    "select": ["sale_id", "s_name AS shop"]}},
+        |"shops": {"raw_file_format": "parquet",
+        |  "unique_primary_key": ["s_id"]}}""".stripMargin)
+    Seq((1L, 10L), (2L, 20L)).toDF("sale_id", "shop_id")
+      .write.parquet(s"$src/sales")
+    Seq((10L, "North"), (20L, "South")).toDF("s_id", "s_name")
+      .write.parquet(s"$src/shops")
+    Seq(tmpDir("ncr-a"), tmpDir("ncr-b")).foreach { store =>
+      val (r, p) = mkRunner(src, store, "2024-06-01 00:00:00",
+        catalog = "ncroot")
+      r.run(ConfigLoader.load(spark, src))
+      Seq("sales" -> "silver", "shops" -> "silver", "sales" -> "gold")
+        .foreach { case (e, layer) =>
+          assert(r.tableVersions(e, layer).exists(_.live),
+            s"$layer $e has no live version under $store")
+        }
+      assert(spark.table(p.goldFqn("sales")).as[(Long, String)]
+        .collect().toSet == Set((1L, "North"), (2L, "South")))
+    }
+  }
+
   test("no-change run skip: a second run over an unchanged feed " +
       "publishes no new silver/gold version (metadata-only); new files " +
       "or a changed config force a republish; content always identical") {
@@ -1673,7 +1727,10 @@ class PipelineSpec extends AnyFunSuite {
     val bU = bucketOf(0L); val bD = (0 to 3).find(_ != bU).get
     write(Row(0L, 999, "U") +: byBucket(bD).map(i => Row(i, 0, "D")))
     val (r2, _) = mkRunner(src, store, "2024-03-01 00:00:00", catalog = "bkt")
-    r2.run(ent)
+    val mergeJobs = jobsOf(r2.run(ent))
+    info(s"copy-on-write single-batch merge: $mergeJobs Spark jobs")
+    assert(mergeJobs <= CowMergeJobBudget,
+      s"the merge ran $mergeJobs jobs, budget $CowMergeJobBudget")
 
     // contents: id 0 updated, bucket D gone, everything else intact
     val got = spark.table(fqn).select($"id", $"downloads")
@@ -1763,11 +1820,14 @@ class PipelineSpec extends AnyFunSuite {
       spark.table(s"`${cat}_silver`.`silver_app_downloads`")
         .select($"id", $"n_downloads", $"v")
         .as[(Long, Long, String)].collect().sorted.toSeq
-    def runBoth(clock: String): Unit = {
+    /** Returns the Spark jobs of the merge-on-read run. */
+    def runBoth(clock: String): Int = {
       val (rm, _) = mkRunner(src, store, clock, catalog = "morm")
       val (rf, _) = mkRunner(srcF, storeF, clock, catalog = "morf")
-      rm.run(ConfigLoader.load(spark, src))
+      val ent = ConfigLoader.load(spark, src)
+      val jobs = jobsOf(rm.run(ent))
       rf.run(ConfigLoader.load(spark, srcF))
+      jobs
     }
     def rawParts(): Seq[(Int, Long)] =
       spark.sql(s"SHOW PARTITIONS $rawFqn").as[String].collect().toSeq
@@ -1805,7 +1865,10 @@ class PipelineSpec extends AnyFunSuite {
       Row(5L, 55, null, "I", "five-bad"),
       Row(9L, 99, "2024-03-01", "I", "nine-new"))
     writeMore(src, batch2); writeMore(srcF, batch2)
-    runBoth("2024-03-05 00:00:00")
+    val mergeJobs = runBoth("2024-03-05 00:00:00")
+    info(s"merge-on-read single-batch merge: $mergeJobs Spark jobs")
+    assert(mergeJobs <= MorMergeJobBudget,
+      s"the merge ran $mergeJobs jobs, budget $MorMergeJobBudget")
     val after = silverRows("morm")
     assert(after == silverRows("morf"),
       "merge-on-read view diverged from the full recompute")
@@ -1839,7 +1902,7 @@ class PipelineSpec extends AnyFunSuite {
     val planStr = spark.table(fqn).queryExecution.executedPlan.toString
     assert(planStr.contains("BroadcastHashJoin"), planStr.take(800))
     assert(!planStr.contains("SortMergeJoin"), planStr.take(800))
-    val bucketOf: Map[Long, Int] = Seq(1L, 2L, 5L, 9L).toDF("id")
+    val bucketOf: Map[Long, Int] = Seq(1L, 2L, 4L, 5L, 9L).toDF("id")
       .select($"id", pmod(hash($"id"), lit(4)).as("b"))
       .as[(Long, Int)].collect().toMap
     val b1 = bucketOf(1L)
@@ -1877,6 +1940,26 @@ class PipelineSpec extends AnyFunSuite {
     // the compacted base holds winners only — no tombstones
     assert(spark.table(rawFqn).where($"_bucket" === b1)
       .where($"_retracted").count() == 0)
+
+    // wave 4: retract EVERY PK of one bucket (ids 2, 4 and 5 — the
+    // bucket of id 2's base row and batch 2's tombstones). Its second
+    // delta passes silver_compact_after=1 and the compaction finds no
+    // winner: the publish DROPs the base partition, then the deltas
+    val bD = bucketOf(2L)
+    assert(Seq(4L, 5L).forall(bucketOf(_) == bD) &&
+      Seq(1L, 9L).forall(bucketOf(_) != bD),
+      s"ids 2, 4, 5 must share a bucket without ids 1, 9: $bucketOf")
+    val partsD = rawParts().filter(_._1 == bD).map(_._2)
+    assert(partsD.contains(0L) && partsD.count(_ > 0L) == 1,
+      s"bucket $bD should hold a base and one delta: ${rawParts()}")
+    val wave4 = Seq(2L, 4L, 5L).map(i =>
+      Row(i, 0, "2024-04-15", "D", s"del-$i"))
+    writeMore(src, wave4); writeMore(srcF, wave4)
+    runBoth("2024-04-20 00:00:00")
+    assert(silverRows("morm") == silverRows("morf"),
+      "view diverged from the full recompute after a bucket retraction")
+    assert(!rawParts().exists(_._1 == bD),
+      s"retracted bucket $bD kept a partition: ${rawParts()}")
 
     // strategy switch on an existing table: loud, names the remedy;
     // with --full-refresh it rebuilds under the new strategy as a TABLE
